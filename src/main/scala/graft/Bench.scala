@@ -239,11 +239,9 @@ object Bench {
     val scanSplits =
       try Tables.lineitem(spark, sfDir).rdd.getNumPartitions
       catch { case _: Throwable => -1 }
-    val sessionFacts = Seq(
-      "master" -> ("\"" + spark.sparkContext.master + "\""),
-      "default_parallelism" -> spark.sparkContext.defaultParallelism.toString,
-      "scan_splits_largest" -> scanSplits.toString)
-    val line = renderLine(results, flaky.toSeq, calibMin, sfDir, sessionFacts)
+    val facts = sessionFacts(spark.sparkContext.master,
+      spark.sparkContext.defaultParallelism, scanSplits)
+    val line = renderLine(results, flaky.toSeq, calibMin, sfDir, facts)
     val outPath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_OUT", "."), "bench.json")
     Files.writeString(outPath, line + "\n")
     // print the JSON first (before any shutdown noise), then the file path
@@ -251,6 +249,21 @@ object Bench {
     println(s"bench json written to: ${outPath.toAbsolutePath}")
     spark.stop()
   }
+
+  /** JSON string literal: quotes, backslashes and control chars escaped. */
+  private def jq(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The session facts [[renderLine]] appends, as raw JSON values. */
+  def sessionFacts(master: String, parallelism: Int,
+      scanSplits: Int): Seq[(String, String)] = Seq(
+    "master" -> jq(master),
+    "default_parallelism" -> parallelism.toString,
+    "scan_splits_largest" -> scanSplits.toString)
 
   /** Render the one-line band-derivation JSON (pure; BenchRenderSpec).
     *
@@ -279,12 +292,6 @@ object Bench {
       anchor: Double, margin: Double, sfDir: String): String = {
     require(groupData.nonEmpty && groupData.forall(_.nonEmpty),
       "band derivation needs at least one group with at least one pass")
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Locale.ROOT: the f-interpolator honors the JVM default locale, and
     // a comma-decimal locale would render invalid JSON ("0,2500")
     def r4(d: Double): String =
@@ -333,12 +340,6 @@ object Bench {
   def renderLine(results: Seq[(String, Double, Option[String])],
       flaky: Seq[(String, Int)], calibMin: Double, sfDir: String,
       env: Seq[(String, String)] = Nil): String = {
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = results.sortBy { case (_, v, _) => v }
       .map { case (k, v, _) => jq(k) + ":" + v }
       .mkString("{", ",", "}")
@@ -360,6 +361,6 @@ object Bench {
     val envJson =
       if (env.isEmpty) ""
       else env.map { case (k, v) => jq(k) + ":" + v }.mkString(",", ",", "")
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"flaky":$flakyJson,"calib_sec":$calibMin$envJson,"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"flaky":$flakyJson,"calib_sec":$calibMin$envJson,"sf":${jq(sfDir)}}"""
   }
 }

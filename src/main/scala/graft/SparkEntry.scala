@@ -37,9 +37,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     all("q3_shipping_priority").build(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each build
+    * first installs the graft SQL functions into the caller's session,
+    * which need not have been built with `GraftExtensions`. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (k, d) => k -> d.build }
+    all.map { case (k, d) => k -> { (s: SparkSession, dir: String) =>
+      graft.functions.Functions.install(s)
+      d.build(s, dir)
+    } }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -155,7 +155,7 @@ object Ingest {
     * letting a silent "" reach the L2 change-detection merge. */
   def projectParticipant(raw: DataFrame,
       roomState: Option[DataFrame] = None): DataFrame = {
-    graft.functions.NfdNormalize.register(raw.sparkSession)
+    graft.functions.Functions.install(raw.sparkSession)
     // r22 (guide §4.4's duplicate-evaluation trap, measured via
     // CosProbe): membership/displayname/avatar used to ride three
     // get_json_object calls, each inlined by CollapseProject into every

@@ -64,7 +64,6 @@ object Cdc {
   private[graft] def chunkDf(docs: org.apache.spark.sql.DataFrame) = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.CdcCuts.register(s)
     docs
       .withColumn("norm", regexp_replace(lower(trim($"text")), "\\s+", " "))
       .filter(length($"norm") > 0)

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.{QueryDef, Tables}
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,9 +26,9 @@ object Dedup {
 
   import TextExpr.{toksE, shinglesE}
 
-  /** distinct word-3-gram shingles, exploded to (doc_id, sh) — r21:
-    * via the one-pass `shingles3` expression (same array as the
-    * [[TextExpr.shinglesE]] lambda, Shingles3Spec-gated; the verify
+  /** distinct word-3-gram shingles, exploded to (doc_id, sh), via the
+    * one-pass `shingles_n(toks, 3)` expression (same array as the
+    * [[TextExpr.shinglesE]] lambda, ShinglesNSpec-gated; the verify
     * joins evaluate this scan twice per pair query).
     *
     * r22 NEGATIVE RESULT, kept out deliberately: verifying candidates
@@ -43,10 +42,9 @@ object Dedup {
     * aggregated count. The exploded formulation stays. */
   private def shingles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.Shingles3.register(s)
     Tables.documents(s, dir)
       .withColumn("toks", expr(toksE))
-      .select($"doc_id", explode(expr("shingles3(toks)")).as("sh"))
+      .select($"doc_id", explode(expr("shingles_n(toks, 3)")).as("sh"))
   }
 
   /** Per-doc 8 min-hash signatures plus shingle count — the LSH
@@ -69,7 +67,6 @@ object Dedup {
     * cross-job policy. */
   private def minhashSigs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.MinHashSigs.register(s)
     // the <3-token drop rides a CHEAP size() predicate, NOT
     // isNotNull(minhash_sigs(...)): a pushed-down isNotNull would
     // re-evaluate the whole expression in the filter — measured 2×
@@ -110,7 +107,6 @@ object Dedup {
     // predicate (the minhashSigs pushdown lesson), and the
     // localCheckpoint replaces the aggregate Exchange that
     // ReuseExchange used to share between the band join's two sides.
-    graft.functions.SimHashDoc.register(s)
     val sim = Tables.documents(s, dir)
       .withColumn("toks", expr(toksE))
       .filter(size($"toks") > 0)
@@ -417,7 +413,6 @@ object Dedup {
     "dedup_embedding_cosine" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         // TRIANGULAR block-pair sharding: side A replicates only to the
         // pair keys (blk, j) with j ≥ blk, side B only to (i, blk) with
         // i ≤ blk, so each UNORDERED pair meets exactly once — the join
@@ -453,11 +448,11 @@ object Dedup {
         // replicate cosine_sim's edge semantics without re-evaluating
         // the dot: dimension mismatch → NULL (checked on cheap size()),
         // zero-norm side → 0.0, null element → NULL (dot_product and
-        // the null norm both propagate). The per-pair round rides
+        // the null norm both propagate; the zero-norm arm requires both
+        // norms non-NULL, since NULL OR TRUE is TRUE). The per-pair round rides
         // round_hu — Spark round(_,4) bit-identically (FastRoundSpec)
         // without RoundBase's per-row BigDecimal, which RoundProbe
         // measured at 1.05 s of this query's 2.0 s (2M pair rows).
-        graft.functions.RoundHalfUp.register(s)
         val e = Tables.embeddings(s, dir)
           .select($"vec_id", $"embedding", pmod($"vec_id", lit(P)).as("blk"),
             sqrt(expr("dot_product(embedding, embedding)")).as("nrm"))
@@ -477,7 +472,7 @@ object Dedup {
             greatest($"a_id", $"b_id").as("b_id"),
             expr("round_hu(" +
               "CASE WHEN size(va) != size(vb) THEN CAST(NULL AS DOUBLE) " +
-              "WHEN na = 0.0d OR nb = 0.0d THEN 0.0d " +
+              "WHEN na IS NOT NULL AND nb IS NOT NULL AND (na = 0.0d OR nb = 0.0d) THEN 0.0d " +
               "ELSE dot_product(va, vb) / (na * nb) END, 4)").as("cos"))
           .orderBy($"cos".desc, $"a_id".asc, $"b_id".asc)
           .limit(20)

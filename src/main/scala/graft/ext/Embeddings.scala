@@ -2,7 +2,6 @@ package graft.ext
 
 import graft.{QueryDef, Tables}
 import graft.etl.MergeWriter
-import graft.functions.VectorFunctions
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,7 +61,6 @@ object Embeddings {
     // rows bit-identical (VecDistSpec — same fold order, same Spark
     // round-6 semantics, same (d2, c_label) tie-break via the
     // ascending-label codebook panel).
-    graft.functions.VecNearest.register(s)
     val cellsArr = broadcast(cells.agg(
       sort_array(collect_list(struct($"label".as("c_label"), $"cv"))).as("cells")))
     // vd as array<double> directly: `q / 10000.0` alone is
@@ -276,7 +274,6 @@ object Embeddings {
     * the registered probe runs. */
   private[graft] def persistedProbeTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    VectorFunctions.register(s)
     val (cdir, adir) = materializeIndex(s, dir)
     val cents = MergeWriter.readSnapshot(s, cdir, idxCentSchema)
     val asgT = MergeWriter.readSnapshot(s, adir, idxAsgSchema)
@@ -410,7 +407,6 @@ object Embeddings {
     "sim_ivf_recall_audit" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         val probe = persistedProbeTopk(s, dir).select($"q_id", $"n_id")
         val e = Tables.embeddings(s, dir)
         val q = e.filter($"vec_id" < 20)
@@ -480,7 +476,6 @@ object Embeddings {
     "sim_ivf_recall_curve" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         val (cdir, adir) = materializeIndex(s, dir)
         val cents = MergeWriter.readSnapshot(s, cdir, idxCentSchema)
         val asgT = MergeWriter.readSnapshot(s, adir, idxAsgSchema)
@@ -582,7 +577,6 @@ object Embeddings {
     "sim_ivf_recall_structured" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         val pl = Tables.embeddings(s, dir).select($"vec_id")
           .withColumn("label", pmod($"vec_id", lit(8)).cast("int"))
           .withColumn("embedding", expr(plantedE))
@@ -695,7 +689,6 @@ object Embeddings {
     "sim_quantize_int8" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         val e = Tables.embeddings(s, dir)
           .withColumn("scale", expr("array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
           .withColumn("q", expr("transform(embedding, x -> CAST(round(127.0 * CAST(x AS DOUBLE) / scale) AS INT))"))
@@ -745,7 +738,6 @@ object Embeddings {
     "dedup_semantic" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         val e = Tables.embeddings(s, dir)
         val a = e.select($"vec_id".as("a_id"), $"embedding".as("va"), $"label")
         val b = e.select($"vec_id".as("b_id"), $"embedding".as("vb"), $"label")

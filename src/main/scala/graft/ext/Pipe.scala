@@ -55,20 +55,6 @@ object Pipe {
     * fitted-to-the-signal practice as txt_gopher_gate / dedup_semantic. */
   val DedupTau = 0.5
 
-  /** The composed-pipeline body, parameterized by the r18 gate barrier
-    * so PipeProbe can time both shapes on identical code. With the
-    * lambda-chain gate, pushing the `keep` predicate through the gate's
-    * projection inlined the tokenizer alias into the lambda bodies —
-    * O(tokens²) re-tokenization per doc, measured 22.9 s pushed vs
-    * 1.3 s materialized-then-filtered at sf0.1 (PLANS round 18 §8) —
-    * so the entry carried a localCheckpoint barrier. The r19 codegen
-    * `token_stats` gate removed the hazard's root: a pushed predicate
-    * now re-evaluates an O(tokens) expression (once per conjunct), so
-    * the barrier is OFF in the registered entry — measured at sf0.1
-    * via PipeProbe: no_barrier 7.98 s vs barrier 7.76 s (parity within
-    * host noise; the 17× cliff is gone — PLANS round 19). PipeSpec's
-    * plan-shape case pins the root cause closed: no HOF lambda chain
-    * may reappear inside the composed plan. */
   /** The pipeline's intermediate stage frames, shared by the packed
     * end-to-end entry and the funnel report so both are the SAME
     * stage composition (no drift possible). */
@@ -84,13 +70,12 @@ object Pipe {
     * it keeps the barrier-free composed plan (r19 parity measurement
     * unchanged). */
   private[graft] def pipeStages(s: SparkSession, dir: String,
-      gateBarrier: Boolean, stageCheckpoint: Boolean = false): PipeStages = {
+      stageCheckpoint: Boolean = false): PipeStages = {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         def bar(df: DataFrame): DataFrame =
           if (stageCheckpoint) df.localCheckpoint() else df
-        val gateRaw = TextStats.defs("txt_gopher_gate").build(s, dir)
-        val gate = bar((if (gateBarrier) gateRaw.localCheckpoint() else gateRaw)
+        val gate = bar(TextStats.defs("txt_gopher_gate").build(s, dir)
           .filter($"keep").select($"doc_id"))
         val decon = bar(TextStats.defs("txt_decontaminate").build(s, dir)
           .filter(!$"contaminated").select($"doc_id"))
@@ -109,10 +94,13 @@ object Pipe {
         PipeStages(gate, decon, keepers, mixed)
   }
 
-  private[graft] def pipeBuild(s: SparkSession, dir: String,
-      gateBarrier: Boolean): DataFrame = {
+  /** The composed-pipeline body. No localCheckpoint barrier follows the
+    * gate: the codegen `token_stats` gate keeps a pushed `keep` predicate
+    * O(tokens), and at sf0.1 the barrier-free plan measured at parity
+    * (7.98 s vs 7.76 s with the barrier, PLANS round 19). */
+  private[graft] def pipeBuild(s: SparkSession, dir: String): DataFrame = {
         import s.implicits._
-        val st = pipeStages(s, dir, gateBarrier)
+        val st = pipeStages(s, dir)
         val docs = Tables.documents(s, dir)
           .withColumn("toks", expr(TextExpr.toksE))
           .select($"doc_id", size($"toks").cast("long").as("n_tokens"),
@@ -170,7 +158,7 @@ object Pipe {
 
   val defs: Map[String, QueryDef] = Map(
     "pipe_corpus_end2end" -> QueryDef(
-      build = (s, dir) => pipeBuild(s, dir, gateBarrier = false),
+      build = pipeBuild,
       oracle = Some(s"""
         WITH RECURSIVE ${Cluster.compCtesAt(DedupTau)},
         $stageCtes,
@@ -216,7 +204,7 @@ object Pipe {
         import s.implicits._
         // r21: stageCheckpoint — the six panels read the stage frames
         // 2–4× each; see pipeStages
-        val st = pipeStages(s, dir, gateBarrier = false, stageCheckpoint = true)
+        val st = pipeStages(s, dir, stageCheckpoint = true)
         val docs = Tables.documents(s, dir)
           .withColumn("toks", expr(TextExpr.toksE))
           .select($"doc_id", size($"toks").cast("long").as("n_tokens"))

@@ -79,7 +79,6 @@ object Pq {
     // Spark round-6, ties → lowest code via the ascending-label
     // codebook panel). [[subD2]] itself stays for the query-side ADC
     // LUT, which keeps ALL (sub, entry) distances and is q-sized.
-    graft.functions.PqEncode.register(s)
     val cellsArr = broadcast(cents.agg(
       sort_array(collect_list(struct($"label".as("c_label"), $"cv"))).as("cells")))
     // vd as array<double> directly (the assignTop note: the plain

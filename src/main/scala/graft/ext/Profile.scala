@@ -33,8 +33,9 @@ object Profile {
     * r22 plan shape (guide §2.3/§2.4): nulls + min/max for all six
     * columns ride ONE aggregate pass; each exact distinct count is its
     * OWN two-phase aggregation (partial per-partition dedup → count)
-    * over a single-column projection, and the seven 1-row frames
-    * cross-join. The previous all-in-one aggregate made Catalyst plan
+    * over a single-column projection, and the six counts enter the
+    * base row's projection as uncorrelated scalar subqueries, so the
+    * plan holds no join. The previous all-in-one aggregate made Catalyst plan
     * the 6-way multi-distinct as a single Expand — every input row
     * expanded ×6 into one wide hash aggregate whose grouping state
     * spans every column at once. Measured at sf0.1 (PairsProbe, min of
@@ -56,10 +57,8 @@ object Profile {
       Seq(nulls(c), f(min(col(c))).as(s"${c}_min"), f(max(col(c))).as(s"${c}_max"))
     }
     val base = ev.agg(baseAggs.head, baseAggs.tail: _*)
-    val wide = cols.foldLeft(base) { (acc, c) =>
-      acc.crossJoin(ev.select(col(c))
-        .agg(countDistinct(col(c)).as(s"${c}_distinct")))
-    }
+    val wide = base.select(col("*") +: cols.map(c =>
+      ev.select(col(c)).agg(countDistinct(col(c))).scalar().as(s"${c}_distinct")): _*)
     val stackArgs = cols.map(c =>
       s"'$c', ${c}_nulls, ${c}_distinct, ${c}_min, ${c}_max").mkString(", ")
     wide.select(expr(s"stack(${cols.size}, $stackArgs) AS (col_name, n_nulls, n_distinct, min_s, max_s)"))

@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.{QueryDef, Tables}
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -38,7 +37,6 @@ object Similarity {
     * vector constant — the registered query pins planes=8). */
   def hyperplaneBuckets(s: SparkSession, dir: String, planes: Int): DataFrame = {
     import s.implicits._
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val pl = e.filter($"vec_id" < planes)
       .select($"vec_id".as("p_id"), $"embedding".as("pv"))
@@ -53,7 +51,6 @@ object Similarity {
     * is exactly `lshTopk(_, _, 8)`. */
   def lshTopk(s: SparkSession, dir: String, planes: Int): DataFrame = {
     import s.implicits._
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, dir)
     val sig = hyperplaneBuckets(s, dir, planes)
     val withB = e.join(sig, "vec_id")
@@ -72,7 +69,6 @@ object Similarity {
     "sim_cosine_topk" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         val e = Tables.embeddings(s, dir)
         val q = e.filter($"vec_id" < 10)
           .select($"vec_id".as("q_id"), $"embedding".as("qv"))
@@ -168,7 +164,6 @@ object Similarity {
     "sim_ivf_label_topk" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        VectorFunctions.register(s)
         val e = Tables.embeddings(s, dir)
         val q = e.filter($"vec_id" < 20)
           .select($"vec_id".as("q_id"), $"embedding".as("qv"), $"label")

@@ -2,6 +2,7 @@ package graft.ext
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,12 +35,18 @@ private[ext] object StoreRoot {
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Cheap, job-free identity of the table's source files: sorted
-    * `path|size|mtimeMs` lines. Listing only — never reads data. */
-  private def sourceMeta(df: DataFrame): String =
-    df.inputFiles.sorted.map { f =>
-      val p = Paths.get(new java.net.URI(f).getPath)
-      s"$f|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-    }.mkString("\n")
+    * `path|size|mtimeMs` lines. Listing only — never reads data. None
+    * when a listed file cannot be stat'ed (it vanished after the
+    * listing, say): the caller then falls back to the full scan. */
+  private def sourceMeta(df: DataFrame): Option[String] = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    try Some(df.inputFiles.sorted.map { f =>
+      val p = new Path(f)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f|${st.getLen}|${st.getModificationTime}"
+    }.mkString("\n"))
+    catch { case _: java.io.IOException => None }
+  }
 
   def resolve(s: SparkSession, dir: String, envKey: String,
       defaultSubdir: String, table: (SparkSession, String) => DataFrame,
@@ -52,22 +59,23 @@ private[ext] object StoreRoot {
       val df = table(s, dir)
       val meta = sourceMeta(df)
       val manifest = Paths.get(parent, s"$md.manifest")
-      val recorded =
-        if (Files.exists(manifest)) {
-          val lines = new String(Files.readAllBytes(manifest),
-            StandardCharsets.UTF_8).split("\n::\n", 2)
-          if (lines.length == 2 && lines(0) == meta) Some(lines(1).trim) else None
-        } else None
+      val recorded = meta.filter(_ => Files.exists(manifest)).flatMap { m =>
+        val lines = new String(Files.readAllBytes(manifest),
+          StandardCharsets.UTF_8).split("\n::\n", 2)
+        if (lines.length == 2 && lines(0) == m) Some(lines(1).trim) else None
+      }
       val suffix = recorded.getOrElse {
         val r = df.agg(count(lit(1)), max(col(idCol)),
           expr(s"bit_xor(xxhash64($idCol, $contentCol))")).collect()(0)
         val sfx =
           s"$md-n${r.getLong(0)}-m${r.getLong(1)}-x${java.lang.Long.toHexString(r.getLong(2))}"
-        Files.createDirectories(Paths.get(parent))
-        val tmp = Files.createTempFile(Paths.get(parent), s"$md", ".manifest.tmp")
-        Files.write(tmp, s"$meta\n::\n$sfx\n".getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, manifest, StandardCopyOption.REPLACE_EXISTING,
-          StandardCopyOption.ATOMIC_MOVE)
+        meta.foreach { m =>
+          Files.createDirectories(Paths.get(parent))
+          val tmp = Files.createTempFile(Paths.get(parent), s"$md", ".manifest.tmp")
+          Files.write(tmp, s"$m\n::\n$sfx\n".getBytes(StandardCharsets.UTF_8))
+          Files.move(tmp, manifest, StandardCopyOption.REPLACE_EXISTING,
+            StandardCopyOption.ATOMIC_MOVE)
+        }
         sfx
       }
       s"$parent/$suffix"

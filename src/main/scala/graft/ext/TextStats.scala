@@ -28,7 +28,6 @@ object TextStats {
     * O(tokens²) pushdown hazard (r18 VERDICT item 1). */
   private def tokenStats(s: org.apache.spark.sql.SparkSession,
       stops: String = "array()"): org.apache.spark.sql.Column = {
-    graft.functions.TokenStats.register(s)
     expr(s"token_stats($toksE, $stops)")
   }
 
@@ -334,7 +333,6 @@ object TextStats {
         import s.implicits._
         // r22: one-pass shingle_wins(toks, 2) windows instead of the
         // HOF lambda (ShinglesNSpec pins equivalence)
-        graft.functions.ShingleWins.register(s)
         Tables.documents(s, dir)
           .withColumn("toks", expr(toksE))
           .select(explode(expr("shingle_wins(toks, 2)")).as("w"))
@@ -431,9 +429,8 @@ object TextStats {
       build = (s, dir) => {
         import s.implicits._
         // r22: one-pass shingles_n(toks, 8) expression instead of the
-        // HOF transform/array_distinct lambda chain (the Shingles3
-        // rationale at width 8; ShinglesNSpec pins equivalence)
-        graft.functions.ShinglesN.register(s)
+        // HOF transform/array_distinct lambda chain (ShinglesNSpec pins
+        // equivalence)
         val docs = Tables.documents(s, dir).withColumn("toks", expr(toksE))
         val grams = docs.select($"doc_id", explode(expr("shingles_n(toks, 8)")).as("sh"))
         val probe = grams.filter($"doc_id" % 97 === 0).select($"sh").distinct()
@@ -521,7 +518,6 @@ object TextStats {
       build = (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.TokenCounts.register(s)
         val docs = Tables.documents(s, dir)
           .withColumn("toks", expr(toksE))
           .withColumn("n_tokens", size($"toks"))
@@ -584,7 +580,6 @@ object TextStats {
     "txt_lm_score" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        graft.functions.BigramWins.register(s) // r22 one-pass bigram scan
         val docs = Tables.documents(s, dir).withColumn("toks", expr(toksE))
         val bb = docs.select($"doc_id", explode(expr("bigrams(toks)")).as("b"))
           .select($"doc_id", $"b.w1", $"b.w2")
@@ -649,7 +644,6 @@ object TextStats {
         import s.implicits._
         val docs = Tables.documents(s, dir).withColumn("toks", expr(toksE))
           .withColumn("is_tgt", expr("CAST(substring(source, 4) AS INT) % 5 = 0"))
-        graft.functions.BigramWins.register(s) // r22 one-pass bigram scan
         val bb = docs.select($"doc_id", $"is_tgt", explode(expr("bigrams(toks)")).as("b"))
           .select($"doc_id", $"is_tgt", $"b.w1", $"b.w2")
         // r21 note: the window-count rewrite was measured slower here
@@ -727,7 +721,6 @@ object TextStats {
       build = (s, dir) => {
         import s.implicits._
         // r22: one-pass shingles_n(toks, 8) (see txt_decontaminate)
-        graft.functions.ShinglesN.register(s)
         // r21: min-over-window instead of groupBy+join-back — the old
         // shape shuffled the exploded gram table TWICE (once into the
         // min aggregate, once into the SMJ back-join); the window
@@ -790,7 +783,6 @@ object TextStats {
         import s.implicits._
         // r22: one-pass shingle_wins(toks, 8) positional windows
         // instead of the HOF lambda (ShinglesNSpec pins equivalence)
-        graft.functions.ShingleWins.register(s)
         val docs = Tables.documents(s, dir).withColumn("toks", expr(toksE))
         // r21: the span-redundancy window rewrite (one exchange of the
         // window rows instead of groupBy + SMJ back-join); same values

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -148,17 +147,4 @@ object CdcCuts {
     UnsafeArrayData.fromPrimitiveArray(
       if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n))
   }
-
-  /** Idempotently register `cdc_cuts` for SQL/expr use (the
-    * TokenStats.register convention for sessions not built with
-    * GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_cuts",
-      exprs => {
-        require(exprs.length == 1,
-          s"cdc_cuts requires exactly 1 argument (norm), got ${exprs.length}")
-        CdcCuts(exprs.head)
-      },
-      "built-in")
 }

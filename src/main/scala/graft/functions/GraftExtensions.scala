@@ -1,117 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension registration of the native vector expressions, so
-  * any session built with
+/** Session extension that injects the [[Functions]] table, so any
+  * session built with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * (or `.withExtensions`) gets `cosine_sim`/`dot_product` as first-class
-  * SQL functions — the supported injection point, vs the per-session
-  * imperative `VectorFunctions.register` fallback.
+  * (or `.withExtensions`) resolves every graft SQL function.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def binary(name: String, mk: (Expression, Expression) => Expression)(
-        children: Seq[Expression]): Expression = {
-      if (children.length != 2)
-        throw new IllegalArgumentException(
-          s"$name requires exactly 2 arguments, got ${children.length}")
-      mk(children(0), children(1))
-    }
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      binary("cosine_sim", CosineSimilarity.apply) _))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      binary("dot_product", DotProduct.apply) _))
-    ext.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException(
-            s"simhash60 requires exactly 1 argument, got ${children.length}")
-        SimHash60(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("token_stats"),
-      new ExpressionInfo(classOf[TokenStats].getName, "token_stats"),
-      binary("token_stats", TokenStats.apply) _))
-    ext.injectFunction((
-      FunctionIdentifier("vec_nearest"),
-      new ExpressionInfo(classOf[VecNearest].getName, "vec_nearest"),
-      { children: Seq[Expression] =>
-        if (children.length != 3)
-          throw new IllegalArgumentException(
-            s"vec_nearest requires exactly 3 arguments, got ${children.length}")
-        VecNearest(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "pq_encode"),
-      { children: Seq[Expression] =>
-        if (children.length != 4)
-          throw new IllegalArgumentException(
-            s"pq_encode requires exactly 4 arguments, got ${children.length}")
-        PqEncode(children(0), children(1), children(2), children(3))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("shingles3"),
-      new ExpressionInfo(classOf[Shingles3].getName, "shingles3"),
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException(
-            s"shingles3 requires exactly 1 argument, got ${children.length}")
-        Shingles3(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash60_doc"),
-      new ExpressionInfo(classOf[SimHashDoc].getName, "simhash60_doc"),
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException(
-            s"simhash60_doc requires exactly 1 argument, got ${children.length}")
-        SimHashDoc(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException(
-            s"minhash_sigs requires exactly 1 argument, got ${children.length}")
-        MinHashSigs(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("token_counts"),
-      new ExpressionInfo(classOf[TokenCounts].getName, "token_counts"),
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException(
-            s"token_counts requires exactly 1 argument, got ${children.length}")
-        TokenCounts(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_cuts"),
-      new ExpressionInfo(classOf[CdcCuts].getName, "cdc_cuts"),
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException(
-            s"cdc_cuts requires exactly 1 argument, got ${children.length}")
-        CdcCuts(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nfd_normalize"),
-      new ExpressionInfo(classOf[NfdNormalize].getName, "nfd_normalize"),
-      { children: Seq[Expression] =>
-        if (children.length != 1)
-          throw new IllegalArgumentException(
-            s"nfd_normalize requires exactly 1 argument, got ${children.length}")
-        NfdNormalize(children.head)
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Functions.table.foreach(ext.injectFunction)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -155,15 +154,4 @@ object MinHashSigs {
     out(K) = cnt
     new GenericInternalRow(out)
   }
-
-  /** Idempotently register `minhash_sigs` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs",
-      exprs => {
-        require(exprs.length == 1,
-          s"minhash_sigs requires exactly 1 argument (toks), got ${exprs.length}")
-        MinHashSigs(exprs.head)
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,9 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass distinct word-N-gram shingles — the width-parameterized
-  * sibling of [[Shingles3]] (r22): `shingles_n(toks, n)` returns the
-  * array of
+/** One-pass distinct word-N-gram shingles (r22): `shingles_n(toks, n)`
+  * returns the array of
   *
   * {{{
   *   CASE WHEN size(toks) >= n THEN array_distinct(transform(
@@ -26,13 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * participate in whole-stage codegen). One LinkedHashSet pass inside
   * generated code. Consumers: the word-8-gram scans of
   * txt_decontaminate, txt_span_redundancy and txt_span_scrub (and
-  * through them both pipe_corpus entries). ShinglesNSpec pins the
-  * expression against the lambda formulation for several widths,
-  * codegen AND interpreted, and `shingles_n(toks, 3)` against
-  * [[Shingles3]].
+  * through them both pipe_corpus entries), and the word-3-gram scan of
+  * the minhash pair pipeline. ShinglesNSpec pins the expression
+  * against the lambda formulation for several widths, codegen AND
+  * interpreted.
   *
-  * Null contract (as Shingles3): NULL array → NULL; < n tokens →
-  * empty array; NULL ELEMENTS are skipped by concat_ws.
+  * Null contract: NULL array → NULL; < n tokens → empty array; NULL
+  * ELEMENTS are skipped by concat_ws.
   */
 case class ShinglesN(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -106,15 +104,4 @@ object ShinglesN {
     while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
   }
-
-  /** Idempotently register `shingles_n` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles_n",
-      exprs => {
-        require(exprs.length == 2,
-          s"shingles_n requires exactly 2 arguments (toks, n), got ${exprs.length}")
-        ShinglesN(exprs(0), exprs(1))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -31,11 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `conv(…, 16, 10)` parse exactly (SimHashDocSpec pins the
   * equivalence, codegen AND interpreted). Sign rule and tie handling
   * (counter > 0 sets the bit, == 0 leaves it clear) match
-  * [[SimHash60]] bit for bit.
+  * the `simhash60` aggregate (`SimHash60`, now the test-scope
+  * reference twin) bit for bit.
   *
   * Null contract: NULL array → NULL; empty array → NULL (see above); a
   * NULL ELEMENT contributes `md5(NULL)` = NULL = no vote, exactly as
-  * the explode+agg path skipped it ([[SimHash60.update]] ignores null
+  * the explode+agg path skipped it (`SimHash60.update` ignores null
   * inputs) — distinctness of nulls matches `array_distinct` (one null
   * kept, and the one kept null still votes nothing).
   */
@@ -119,15 +119,4 @@ object SimHashDoc {
     while (b < Bits) { if (counters(b) > 0) r |= (1L << b); b += 1 }
     java.lang.Long.valueOf(r)
   }
-
-  /** Idempotently register `simhash60_doc` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60_doc",
-      exprs => {
-        require(exprs.length == 1,
-          s"simhash60_doc requires exactly 1 argument (toks), got ${exprs.length}")
-        SimHashDoc(exprs.head)
-      },
-      "built-in")
 }

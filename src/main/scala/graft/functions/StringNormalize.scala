@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,15 +56,4 @@ object NfdNormalize {
       if (Normalizer.isNormalized(str, Normalizer.Form.NFD)) s
       else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFD))
     }
-
-  /** Idempotently register `nfd_normalize` for SQL/`call_function` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfd_normalize",
-      exprs => {
-        require(exprs.length == 1,
-          s"nfd_normalize requires exactly 1 argument, got ${exprs.length}")
-        NfdNormalize(exprs.head)
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -99,15 +98,4 @@ object TokenCounts {
     }
     new GenericArrayData(out)
   }
-
-  /** Idempotently register `token_counts` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_counts",
-      exprs => {
-        require(exprs.length == 1,
-          s"token_counts requires exactly 1 argument (toks), got ${exprs.length}")
-        TokenCounts(exprs.head)
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -174,17 +173,4 @@ object TokenStats {
       if (n == 0) null else Integer.valueOf(top),
       n2, nDup2, nStop))
   }
-
-  /** Idempotently register `token_stats` for SQL/expr use (the
-    * VectorFunctions.register convention for sessions not built with
-    * GraftExtensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_stats",
-      exprs => {
-        require(exprs.length == 2,
-          s"token_stats requires exactly 2 arguments (toks, stops), got ${exprs.length}")
-        TokenStats(exprs(0), exprs(1))
-      },
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,16 +90,6 @@ object ShingleWins {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_wins",
-      exprs => {
-        require(exprs.length == 2,
-          s"shingle_wins requires exactly 2 arguments (toks, n), got ${exprs.length}")
-        ShingleWins(exprs(0), exprs(1))
-      },
-      "built-in")
 }
 
 /** One-pass adjacent-bigram pairs (r22): `bigrams(toks)` returns
@@ -160,14 +149,4 @@ object BigramWins {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigrams",
-      exprs => {
-        require(exprs.length == 1,
-          s"bigrams requires exactly 1 argument (toks), got ${exprs.length}")
-        BigramWins(exprs.head)
-      },
-      "built-in")
 }

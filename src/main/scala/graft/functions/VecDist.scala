@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -179,16 +178,6 @@ object VecNearest {
     }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_nearest",
-      exprs => {
-        require(exprs.length == 3,
-          s"vec_nearest requires exactly 3 arguments (vd, cells, k), got ${exprs.length}")
-        VecNearest(exprs(0), exprs(1), exprs(2))
-      },
-      "built-in")
 }
 
 /** See [[VecDist]]. */
@@ -260,14 +249,4 @@ object PqEncode {
     if (nc == 0) new GenericArrayData(Array.empty[Any])
     else new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode",
-      exprs => {
-        require(exprs.length == 4,
-          s"pq_encode requires exactly 4 arguments (vd, cells, m, w), got ${exprs.length}")
-        PqEncode(exprs(0), exprs(1), exprs(2), exprs(3))
-      },
-      "built-in")
 }

@@ -54,9 +54,9 @@ object StateSmoke {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.NfdNormalize.register(spark)
 
     // ts normalized at the reader boundary (identity on current
     // timestamp[us] testdata; truncating div on a legacy nanos-as-Long

@@ -138,6 +138,7 @@ class AggregatorLawsSpec extends AnyFunSuite {
 
   test("simhash60: plan-level repartition-count invariance per group") {
     import spark.implicits._
+    SimHash60.registerTwin(spark)
     import org.apache.spark.sql.functions._
     val rnd = new Random(7)
     val rows = (1 to 2000).map(_ => (rnd.nextInt(20).toLong, rnd.nextLong() >>> 4))

@@ -63,6 +63,13 @@ class BenchRenderSpec extends AnyFunSuite {
       Bench.renderLine(results, Nil, 0.25, "/sf", Nil))
   }
 
+  test("session facts escape a master string holding a quote and a backslash") {
+    val l = Bench.renderLine(results, Nil, 0.25, "/sf",
+      Bench.sessionFacts("local[\"4\"]\\x", 4, 1))
+    assert(l.contains("\"calib_sec\":0.25,\"master\":\"local[\\\"4\\\"]\\\\x\"," +
+      "\"default_parallelism\":4,\"scan_splits_largest\":1,\"sf\":\"/sf\"}"), l)
+  }
+
   test("renderBandLine: per-group minima envelope, uniform run-calib rescale, one-line JSON") {
     // two groups of two passes; run calib = min over ALL passes = 0.25.
     // Anchor 0.50 → ONE uniform factor 0.50/0.25 = 2 for everything

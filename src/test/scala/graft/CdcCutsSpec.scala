@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.CdcCuts
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,7 +31,6 @@ class CdcCutsSpec extends AnyFunSuite {
     }
 
   test("cdc_cuts equals the HOF twin over the documents table") {
-    CdcCuts.register(spark)
     import spark.implicits._
     val bad = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("norm", regexp_replace(lower(trim($"text")), "\\s+", " "))
@@ -42,7 +40,6 @@ class CdcCutsSpec extends AnyFunSuite {
   }
 
   test("cdc_cuts equals the HOF twin on adversarial Unicode and boundary lengths") {
-    CdcCuts.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(21)
     // alphabet spanning 1-, 2-, 3- and 4-byte UTF-8 sequences: the
@@ -75,7 +72,6 @@ class CdcCutsSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    CdcCuts.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map { i =>
@@ -111,7 +107,6 @@ class CdcCutsSpec extends AnyFunSuite {
   }
 
   test("null and short-input contract") {
-    CdcCuts.register(spark)
     val r = spark.sql("""
       SELECT cdc_cuts(CAST(NULL AS STRING)) AS null_in,
              cdc_cuts('') AS empty,

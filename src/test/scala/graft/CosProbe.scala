@@ -31,7 +31,6 @@ object CosProbe {
       time(name)(mk.write.format("noop").mode("overwrite").save())
 
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
 
     SparkEntry.queries("dedup_embedding_cosine")(spark, "/root/testdata/sf0.001").collect()
     SparkEntry.queries("ref_t4_member_name")(spark, "/root/testdata/sf0.001").collect()
@@ -110,7 +109,6 @@ object CosProbe {
     timeDf("t4-variant-dnIsString")(raw.select(
       (schema_of_variant(try_variant_get(try_parse_json($"content"), "$.displayname", "variant")) <=> lit("STRING")).as("b")))
     time("t4-nfd-strip") {
-      graft.functions.NfdNormalize.register(spark)
       raw.select(regexp_replace(call_function("nfd_normalize",
         get_json_object($"content", "$.displayname")),
         "[\\s\\u00A0\\u1680\\u2000-\\u200F\\u2028\\u2029\\u202A-\\u202F" +

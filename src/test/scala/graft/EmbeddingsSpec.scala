@@ -132,7 +132,6 @@ class EmbeddingsSpec extends AnyFunSuite {
     val probeIds = Embeddings.defs("sim_ivf_persisted_probe").build(spark, sf)
       .filter($"q_id" === q0).select($"n_id").as[Long].collect().toSet
     val e = Tables.embeddings(spark, sf)
-    graft.functions.VectorFunctions.register(spark)
     val qv = e.filter($"vec_id" === q0).select($"embedding".as("qv"))
     val truthIds = e.filter($"vec_id" =!= q0).crossJoin(broadcast(qv))
       .select($"vec_id", round(expr("cosine_sim(embedding, qv)"), 4).as("cos"))
@@ -146,7 +145,6 @@ class EmbeddingsSpec extends AnyFunSuite {
     import graft.ext.Embeddings
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val pl = Tables.embeddings(spark, sf).select($"vec_id")
       .withColumn("label", pmod($"vec_id", lit(8)).cast("int"))
       .withColumn("embedding", expr(Embeddings.plantedE))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{FastRound, RoundHalfUp}
+import graft.functions.FastRound
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,7 +57,6 @@ class FastRoundSpec extends AnyFunSuite {
   test("round_hu expression matches Spark round() end-to-end (codegen and interpreted)") {
     val spark = Sessions.local(cores = 2, appName = "fastround-spec")
     try {
-      RoundHalfUp.register(spark)
       import spark.implicits._
       val rnd = new scala.util.Random(7)
       val vals = Seq.fill(20000)((rnd.nextDouble() - 0.5) *

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.MinHashSigs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,7 +27,6 @@ class MinHashSigsSpec extends AnyFunSuite {
     }
 
   test("minhash_sigs equals the explode+groupBy formulation over the documents table") {
-    MinHashSigs.register(spark)
     import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("toks", expr(graft.ext.TextExpr.toksE))
@@ -53,7 +51,6 @@ class MinHashSigsSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    MinHashSigs.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(29)
     val vocab = Vector("the", "a", "of", "xx", "yy", "zz", "é", "B", "")
@@ -97,7 +94,6 @@ class MinHashSigsSpec extends AnyFunSuite {
   }
 
   test("null element is skipped exactly like concat_ws, and <3 tokens yields NULL") {
-    MinHashSigs.register(spark)
     val r = spark.sql("""
       SELECT minhash_sigs(CAST(NULL AS ARRAY<STRING>)) AS null_arr,
              minhash_sigs(array('a', 'b')) AS two_toks,
@@ -111,7 +107,6 @@ class MinHashSigsSpec extends AnyFunSuite {
   }
 
   test("minhash_sigs participates in whole-stage codegen") {
-    MinHashSigs.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr(s"minhash_sigs(${graft.ext.TextExpr.toksE}).n AS n")
     val codegenStages = df.queryExecution.executedPlan.collect {

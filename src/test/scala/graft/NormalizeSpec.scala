@@ -69,7 +69,6 @@ class NormalizeSpec extends AnyFunSuite {
   }
 
   test("registered function: known values and null propagation") {
-    NfdNormalize.register(spark)
     val r = spark.sql(
       "SELECT nfd_normalize('Jos\u00E9'), nfd_normalize(''), " +
         "nfd_normalize(CAST(NULL AS STRING))").collect()(0)
@@ -80,7 +79,6 @@ class NormalizeSpec extends AnyFunSuite {
 
   test("codegen and interpreted eval agree bit-for-bit; expression stays in whole-stage codegen") {
     import spark.implicits._
-    NfdNormalize.register(spark)
     val corpus: Seq[(Int, String)] = Seq(
       1 -> "ascii only",
       2 -> "",

@@ -39,12 +39,10 @@ object PairsProbe {
     SparkEntry.queries("ref_t4_member_name")(spark, "/root/testdata/sf0.001").collect()
     Bench.isolate(spark)
 
-    graft.functions.Shingles3.register(spark)
-    graft.functions.MinHashSigs.register(spark)
     val docs = Tables.documents(spark, dir)
     def shingles(): DataFrame = docs
       .withColumn("toks", expr(graft.ext.TextExpr.toksE))
-      .select($"doc_id", explode(expr("shingles3(toks)")).as("sh"))
+      .select($"doc_id", explode(expr("shingles_n(toks, 3)")).as("sh"))
     def sigsRaw(): DataFrame = docs
       .withColumn("toks", expr(graft.ext.TextExpr.toksE))
       .filter(size($"toks") >= 3)

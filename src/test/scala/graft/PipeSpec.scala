@@ -84,11 +84,11 @@ class PipeSpec extends AnyFunSuite {
     // signals (array_max(transform(array_distinct(...)))) were
     // CodegenFallback AND quadratic once a pushed predicate inlined the
     // tokenizer alias per element. r19 replaced them with the one-pass
-    // codegen token_stats expression and removed the barrier (PipeProbe:
+    // codegen token_stats expression and removed the barrier (measured
     // 7.98 s vs 7.76 s at sf0.1 — the 17× cliff gone). This pins the
     // fix structurally: if a refactor reintroduces a lambda-chain
     // signal anywhere in the composed plan, the hazard is back and this
-    // fails — whatever the current barrier setting. (The pipe's own
+    // fails. (The pipe's own
     // optimizedPlan can't be inspected end-to-end: its packing barrier
     // is an EAGER localCheckpoint, so the upstream stages collapse to a
     // LogicalRDD at build time. The hazard lived in exactly one frame —

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{expr, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke + semantic checks for every registered query at sf0.001.
@@ -72,6 +73,28 @@ class QueriesSpec extends AnyFunSuite {
       try assert(run() == auto, s"P=$p changed the top-20")
       finally spark.conf.unset("spark.graft.cosineBlocks")
     }
+  }
+
+  test("dedup_embedding_cosine: a NULL element against a zero-norm vector is NULL, as cosine_sim") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cosine-null").toString
+    Seq[(Long, Seq[Option[Float]])](
+      (1L, Seq(Some(1f), None)),
+      (2L, Seq(Some(0f), Some(0f))),
+      (3L, Seq(Some(1f), Some(2f))))
+      .toDF("vec_id", "embedding").withColumn("label", lit(0))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val e = Tables.embeddings(spark, dir)
+    val want = e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")
+      .select($"a.vec_id", $"b.vec_id",
+        expr("round(cosine_sim(a.embedding, b.embedding), 4)"))
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+    val got = SparkEntry.queries("dedup_embedding_cosine")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+    assert(want.contains((1L, 2L, None)), want)
+    assert(got == want)
   }
 
   test("suite-wide plan guard: no cartesian products; nested-loop joins only where documented") {

@@ -10,7 +10,6 @@ object RoundProbe {
     val spark = Sessions.local(cores = 32, appName = "graft-roundprobe")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     SparkEntry.queries("dedup_embedding_cosine")(spark, "/root/testdata/sf0.001").collect()
     Bench.isolate(spark)
     def time(name: String)(mk: => DataFrame): Unit = {

@@ -1,12 +1,11 @@
 package graft
 
-import graft.functions.Shingles3
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Contracts of the one-pass `shingles3` expression that replaced the
-  * shinglesE HOF lambda inside the minhash pair pipeline (r21):
+/** Contracts of word-3-gram shingling, `shingles_n(toks, 3)`, the width
+  * the minhash pair pipeline uses in place of the shinglesE HOF lambda:
   * bit-for-bit array equivalence (elements AND order) over the real
   * documents table and adversarial arrays, codegen ≡ interpreted, and
   * the null/short contract.
@@ -15,16 +14,14 @@ class Shingles3Spec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.local(cores = 4, appName = "graft-shingles3")
 
   test("shingles3 equals the shinglesE lambda over the documents table") {
-    Shingles3.register(spark)
     import spark.implicits._
     val bad = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("toks", expr(graft.ext.TextExpr.toksE))
-      .filter(!(expr("shingles3(toks)") <=> expr(graft.ext.TextExpr.shinglesE)))
-    assert(bad.count() == 0, "shingles3 diverged from the shinglesE lambda")
+      .filter(!(expr("shingles_n(toks, 3)") <=> expr(graft.ext.TextExpr.shinglesE)))
+    assert(bad.count() == 0, "shingles_n(toks, 3) diverged from the shinglesE lambda")
   }
 
   test("codegen and interpreted paths agree, incl. null elements and short arrays") {
-    Shingles3.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(37)
     val vocab = Vector("the", "a", "of", "xx", "yy", "é", "B", "")
@@ -51,7 +48,7 @@ class Shingles3Spec extends AnyFunSuite {
         spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       }
       try spark.read.parquet(tmp)
-        .selectExpr("id", "CAST(shingles3(toks) AS STRING) AS sh")
+        .selectExpr("id", "CAST(shingles_n(toks, 3) AS STRING) AS sh")
         .collect()
         .map(r => (r.getInt(0), r.getString(1)))
         .toSeq.sortBy(_._1)
@@ -65,21 +62,20 @@ class Shingles3Spec extends AnyFunSuite {
     }
     val gen = run(interpreted = false)
     val int = run(interpreted = true)
-    assert(gen == int, "codegen and interpreted shingles3 diverged")
+    assert(gen == int, "codegen and interpreted shingles_n(toks, 3) diverged")
     // and the lambda agrees on the adversarial frame too (null-skip,
     // first-occurrence order)
     val bad = spark.read.parquet(tmp)
-      .filter(!(expr("shingles3(toks)") <=>
+      .filter(!(expr("shingles_n(toks, 3)") <=>
         expr(graft.ext.TextExpr.shinglesE.replace("toks", "toks"))))
-    assert(bad.count() == 0, "shingles3 diverged from the lambda on adversarial arrays")
+    assert(bad.count() == 0, "shingles_n(toks, 3) diverged from the lambda on adversarial arrays")
   }
 
   test("null and short contract") {
-    Shingles3.register(spark)
     val r = spark.sql("""
-      SELECT shingles3(CAST(NULL AS ARRAY<STRING>)) AS null_arr,
-             shingles3(array('a', 'b')) AS short,
-             shingles3(array('a', 'b', 'c', 'b', 'c')) AS ok
+      SELECT shingles_n(CAST(NULL AS ARRAY<STRING>), 3) AS null_arr,
+             shingles_n(array('a', 'b'), 3) AS short,
+             shingles_n(array('a', 'b', 'c', 'b', 'c'), 3) AS ok
     """).collect()(0)
     assert(r.isNullAt(0))
     assert(r.getSeq[String](1).isEmpty)

@@ -31,46 +31,54 @@ class ShinglesNSpec extends AnyFunSuite {
     val spark = Sessions.local(cores = 4, appName = "shinglesn-spec")
     try {
       import spark.implicits._
-      graft.functions.ShinglesN.register(spark)
-      graft.functions.ShingleWins.register(spark)
-      graft.functions.BigramWins.register(spark)
+      val toks = expr(graft.ext.TextExpr.toksE).as("toks")
 
       val rnd = new scala.util.Random(11)
       val synth = (1 to 2000).map { _ =>
         val len = rnd.nextInt(20)
         (1 to len).map(_ => s"w${rnd.nextInt(6)}").mkString(" ")
       } ++ Seq("", "one", "a b", "a a a a a a a a a a", "x y z x y z x y")
-      val synthDf = synth.toDF("text")
+      // token arrays the whitespace tokenizer never yields: NULL arrays,
+      // NULL elements (concat_ws skips them) and arrays shorter than
+      // every width
+      val edge: Seq[Option[Seq[Option[String]]]] = (1 to 500).map { _ =>
+        Some(Seq.fill(rnd.nextInt(12))(
+          if (rnd.nextInt(4) == 0) None else Some(s"w${rnd.nextInt(4)}")))
+      } ++ Seq(None, Some(Nil), Some(Seq(None)), Some(Seq(Some("a"))),
+        Some(Seq(Some("a"), None)), Some(Seq(None, None, None)))
       val corpus = Tables.documents(spark, "/root/testdata/sf0.01").select($"text")
 
-      def checkOn(df0: DataFrame, label: String): Unit = {
-        val df = df0.withColumn("toks",
-          expr(graft.ext.TextExpr.toksE)).select($"toks")
+      // NULL tokens give NULL; otherwise each expression equals its lambda
+      def same(a: String, b: String) =
+        when($"toks".isNull, expr(a).isNull).otherwise(expr(a) <=> expr(b))
+
+      def checkOn(df: DataFrame, label: String): Unit = {
         for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
           spark.conf.set("spark.sql.codegen.factoryMode", mode)
           for (n <- Seq(2, 3, 8)) {
-            val bad = df.select(
-              expr(s"shingles_n(toks, $n)").as("a"),
-              expr(lambdaShingles(n)).as("b"),
-              expr(s"shingle_wins(toks, $n)").as("wa"),
-              expr(lambdaWins(n)).as("wb"))
-              .filter(!($"a" <=> $"b") || !($"wa" <=> $"wb")).count()
+            val bad = df.filter(!same(s"shingles_n(toks, $n)", lambdaShingles(n)) ||
+              !same(s"shingle_wins(toks, $n)", lambdaWins(n))).count()
             assert(bad == 0, s"$label/$mode: width $n diverged on $bad rows")
           }
-          val badB = df.select(expr("bigrams(toks)").as("a"),
-            expr(lambdaBigrams).as("b"))
-            .filter(!($"a" <=> $"b")).count()
+          val badB = df.filter(!same("bigrams(toks)", lambdaBigrams)).count()
           assert(badB == 0, s"$label/$mode: bigrams diverged on $badB rows")
         }
         spark.conf.unset("spark.sql.codegen.factoryMode")
       }
-      checkOn(synthDf, "synthetic")
-      checkOn(corpus, "corpus")
-      // shingles_n(_, 3) ≡ the r21 shingles3 expression
-      graft.functions.Shingles3.register(spark)
-      val d3 = corpus.withColumn("toks", expr(graft.ext.TextExpr.toksE))
-        .filter(!(expr("shingles_n(toks, 3)") <=> expr("shingles3(toks)"))).count()
-      assert(d3 == 0, "shingles_n(,3) != shingles3")
+      checkOn(synth.toDF("text").select(toks), "synthetic")
+      // through parquet, so the generated code sees them too (a local
+      // relation is evaluated on the driver by the optimizer)
+      val edgeDir = java.nio.file.Files.createTempDirectory("graft-shinglesn").toString + "/edge"
+      edge.toDF("toks").write.parquet(edgeDir)
+      checkOn(spark.read.parquet(edgeDir), "edge")
+      checkOn(corpus.select(toks), "corpus")
+
+      val r = spark.sql("""
+        SELECT shingles_n(array('a', 'b'), 3) AS short,
+               shingles_n(array('a', 'b', 'c', 'b', 'c'), 3) AS ok
+      """).collect()(0)
+      assert(r.getSeq[String](0).isEmpty)
+      assert(r.getSeq[String](1) == Seq("a b c", "b c b", "c b c"))
     } finally spark.stop()
   }
 }

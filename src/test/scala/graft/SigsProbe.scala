@@ -10,7 +10,6 @@ object SigsProbe {
     val spark = Sessions.local(cores = 32, appName = "graft-sigsprobe")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    graft.functions.MinHashSigs.register(spark)
 
     def time(name: String)(mk: => DataFrame): Unit = {
       val secs = (1 to 3).map { _ =>

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.SimHashDoc
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,7 +28,7 @@ class SimHashDocSpec extends AnyFunSuite {
     }
 
   test("simhash60_doc equals the explode+simhash60 pipeline over the documents table") {
-    SimHashDoc.register(spark)
+    graft.functions.SimHash60.registerTwin(spark)
     import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("toks", expr(graft.ext.TextExpr.toksE))
@@ -45,7 +44,6 @@ class SimHashDocSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    SimHashDoc.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(31)
     val vocab = Vector("the", "a", "of", "xx", "yy", "zz", "é", "B", "")
@@ -87,7 +85,6 @@ class SimHashDocSpec extends AnyFunSuite {
   }
 
   test("null/empty contract matches the explode+agg row semantics") {
-    SimHashDoc.register(spark)
     val r = spark.sql("""
       SELECT simhash60_doc(CAST(NULL AS ARRAY<STRING>)) AS null_arr,
              simhash60_doc(array()) AS empty,
@@ -104,7 +101,6 @@ class SimHashDocSpec extends AnyFunSuite {
   }
 
   test("simhash60_doc participates in whole-stage codegen") {
-    SimHashDoc.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr(s"simhash60_doc(${graft.ext.TextExpr.toksE}) AS h")
     val codegenStages = df.queryExecution.executedPlan.collect {

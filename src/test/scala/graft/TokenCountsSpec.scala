@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.TokenCounts
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,7 +27,6 @@ class TokenCountsSpec extends AnyFunSuite {
     "transform(array_distinct(toks), w -> struct(w AS term, size(filter(toks, t -> t = w)) AS cnt))"
 
   test("token_counts equals the lambda expansion over the documents table") {
-    TokenCounts.register(spark)
     import spark.implicits._
     val bad = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("toks", expr(graft.ext.TextExpr.toksE))
@@ -37,7 +35,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree on randomized and edge-case arrays") {
-    TokenCounts.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(23)
     val vocab = Vector("the", "a", "of", "xx", "yy", "zz zz", "", "é", "B")
@@ -81,7 +78,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("null contract: null array, null element, empty array") {
-    TokenCounts.register(spark)
     val r = spark.sql("""
       SELECT token_counts(CAST(NULL AS ARRAY<STRING>)) AS null_arr,
              token_counts(array('a', CAST(NULL AS STRING), 'b')) AS null_elem,
@@ -93,7 +89,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("token_counts participates in whole-stage codegen") {
-    TokenCounts.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr(s"size(token_counts(${graft.ext.TextExpr.toksE})) AS n")
     val codegenStages = df.queryExecution.executedPlan.collect {

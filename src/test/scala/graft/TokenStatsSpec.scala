@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.TokenStats
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +30,6 @@ class TokenStatsSpec extends AnyFunSuite {
   private val stopsE = "array('the','a','of','and','to','in','is','it')"
 
   test("token_stats fields equal the lambda formulas over the documents table") {
-    TokenStats.register(spark)
     import spark.implicits._
     val bad = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("toks", expr(graft.ext.TextExpr.toksE))
@@ -54,7 +52,6 @@ class TokenStatsSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree on randomized and edge-case token arrays") {
-    TokenStats.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(19)
     val vocab = Vector("the", "a", "of", "xx", "yy", "zz zz", "", "é", "B")
@@ -99,7 +96,6 @@ class TokenStatsSpec extends AnyFunSuite {
   }
 
   test("null contract: null array, null element, null stops, empty array") {
-    TokenStats.register(spark)
     val r = spark.sql(s"""
       SELECT token_stats(CAST(NULL AS ARRAY<STRING>), array()) AS null_arr,
              token_stats(array('a', CAST(NULL AS STRING), 'b'), array()) AS null_elem,
@@ -116,7 +112,6 @@ class TokenStatsSpec extends AnyFunSuite {
   }
 
   test("token_stats participates in whole-stage codegen") {
-    TokenStats.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr(s"token_stats(${graft.ext.TextExpr.toksE}, $stopsE).n_tokens AS n")
     val codegenStages = df.queryExecution.executedPlan.collect {

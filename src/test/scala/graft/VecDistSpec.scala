@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.{PqEncode, VecNearest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,7 +32,6 @@ class VecDistSpec extends AnyFunSuite {
   private def cents: DataFrame = graft.ext.Embeddings.centroids(embeddings)
 
   test("vec_nearest equals the crossJoin+window assignTop at k = 1, 2, 4") {
-    VecNearest.register(spark)
     import spark.implicits._
     for (k <- Seq(1, 2, 4)) {
       val w = Window.partitionBy($"vec_id").orderBy($"d2".asc, $"c_label".asc)
@@ -56,7 +54,6 @@ class VecDistSpec extends AnyFunSuite {
   }
 
   test("pq_encode equals the subD2+window codes at (m=4, w=16)") {
-    PqEncode.register(spark)
     import spark.implicits._
     val e = embeddings
     val cs = cents
@@ -73,8 +70,6 @@ class VecDistSpec extends AnyFunSuite {
   }
 
   test("tie-break: equal distances pick the lowest label (constructed tie)") {
-    VecNearest.register(spark)
-    PqEncode.register(spark)
     // two identical codebook entries (labels 7 and 3) — every distance
     // ties, so both expressions must pick label 3
     val r = spark.sql("""
@@ -93,8 +88,6 @@ class VecDistSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    VecNearest.register(spark)
-    PqEncode.register(spark)
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-vecdist").toString + "/data"
     embeddings.write.parquet(tmp)
@@ -130,7 +123,6 @@ class VecDistSpec extends AnyFunSuite {
   }
 
   test("vec_nearest participates in whole-stage codegen") {
-    VecNearest.register(spark)
     val cellsArr = broadcast(cents.agg(
       sort_array(collect_list(struct(col("label").as("c_label"), col("cv")))).as("cells")))
     val df = embeddings.crossJoin(cellsArr)

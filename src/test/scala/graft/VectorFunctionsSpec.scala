@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +18,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
 
   test("cosine_sim and dot_product on known vectors") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1.0f, 0.0f), Array(1.0f, 0.0f), 1.0, 1.0),
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f), 0.0, 0.0),
@@ -35,13 +33,11 @@ class VectorFunctionsSpec extends AnyFunSuite {
   }
 
   test("cosine_sim null propagates") {
-    VectorFunctions.register(spark)
     val df = spark.sql("SELECT cosine_sim(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS c")
     assert(df.collect()(0).isNullAt(0))
   }
 
   test("expression participates in whole-stage codegen") {
-    VectorFunctions.register(spark)
     // must be a parquet-backed plan: LocalTableScan of literals skips
     // whole-stage codegen regardless of the expression
     val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -66,7 +62,6 @@ class VectorFunctionsSpec extends AnyFunSuite {
     // vectors plus every edge case (dimension mismatch, null elements,
     // zero norms) must agree to the last bit across both paths.
     import spark.implicits._
-    VectorFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     def vec(n: Int): Seq[Option[Float]] =
       Seq.fill(n)(Some((rnd.nextFloat() - 0.5f) * 4f))

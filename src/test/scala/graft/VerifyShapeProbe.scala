@@ -11,7 +11,6 @@ object VerifyShapeProbe {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import graft.ext.{Dedup, TextExpr}
-    graft.functions.Shingles3.register(spark)
     Dedup.minhashPairs(spark, "/root/testdata/sf0.001").collect()
     Bench.isolate(spark)
 
@@ -24,7 +23,7 @@ object VerifyShapeProbe {
     println("n_cand=" + cand().count())
     println("n_shingle_rows=" + Tables.documents(spark, dir)
       .withColumn("toks", expr(TextExpr.toksE))
-      .select($"doc_id", explode(expr("shingles3(toks)")).as("sh")).count())
+      .select($"doc_id", explode(expr("shingles_n(toks, 3)")).as("sh")).count())
     Bench.isolate(spark)
 
     def time(name: String)(mk: => DataFrame): Unit = {
@@ -38,10 +37,10 @@ object VerifyShapeProbe {
     }
     def sh() = Tables.documents(spark, dir)
       .withColumn("toks", expr(TextExpr.toksE))
-      .select($"doc_id", explode(expr("shingles3(toks)")).as("sh"))
+      .select($"doc_id", explode(expr("shingles_n(toks, 3)")).as("sh"))
     def shArr() = Tables.documents(spark, dir)
       .withColumn("toks", expr(TextExpr.toksE))
-      .select($"doc_id", expr("shingles3(toks)").as("shs"))
+      .select($"doc_id", expr("shingles_n(toks, 3)").as("shs"))
 
     time("verify-exploded") {
       val c = cand()

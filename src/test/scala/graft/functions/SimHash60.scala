@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.nio.ByteBuffer
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -24,6 +25,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Deterministic: integer counters, order-independent merge. Ties
   * (counter == 0) leave the bit clear, matching the exhaustive SQL
   * oracle's `CASE WHEN v > 0` exactly.
+  *
+  * No query calls it since `simhash60_doc` replaced the explode+agg
+  * pipeline; it stays as that expression's reference twin.
   */
 case class SimHash60(
     child: Expression,
@@ -91,4 +95,11 @@ case class SimHash60(
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): SimHash60 =
     copy(inputAggBufferOffset = newOffset)
+}
+
+object SimHash60 {
+  /** Registers `simhash60` in a test session. */
+  def registerTwin(spark: SparkSession): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "simhash60", args => SimHash60(args.head), "scala_udf")
 }
