@@ -25,6 +25,38 @@ object Pipeline {
     * of a per-bucket union: the driver-side room list stays bounded,
     * and a scan-all is the right plan for a batch that wide. */
   val MaxPrunedRooms = 4096
+
+  /** Run `chains` on one new thread each and return their results in
+    * order. The threads are started here, per call, so each inherits
+    * the caller's Spark local properties (a stream's job group, so
+    * `stop()` cancels their jobs too) and none outlives the call; each
+    * makes `spark` its active session. Every chain ends before this
+    * returns or throws; the first failure in chain order is rethrown,
+    * with the others attached as suppressed. */
+  private def concurrently[A](spark: SparkSession)(chains: (() => A)*): Seq[A] = {
+    val results = new Array[Either[Throwable, A]](chains.size)
+    val threads = chains.zipWithIndex.map { case (chain, i) =>
+      val t = new Thread(() => {
+        SparkSession.setActiveSession(spark)
+        results(i) = try Right(chain()) catch { case e: Throwable => Left(e) }
+      }, s"graft-batch-chain-$i")
+      t.start()
+      t
+    }
+    // an interrupt (stop() on the stream) must not abandon a chain
+    // mid-commit: keep joining, then rethrow it first
+    var interrupted: Option[InterruptedException] = None
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case e: InterruptedException => interrupted = Some(e) }
+    }
+    val failures = interrupted.toSeq ++ results.toSeq.collect { case Left(e) => e }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+    results.toSeq.collect { case Right(a) => a }
+  }
 }
 
 final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None) {
@@ -41,27 +73,15 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
     * `tsCol` names the quarantined frame's timestamp column (messages
     * carry processed_at; participant rows carry last_updated). */
   private def quarantineToLogs(spark: SparkSession, quarantined: DataFrame,
-      tsCol: String = "processed_at"): Unit =
-    if (!quarantined.isEmpty) // don't commit an empty log segment per clean batch
-      catalog.append(spark, "logs", quarantined.select(
-        col(tsCol).as("timestamp"),
-        lit("error").as("level"),
-        concat_ws(": ", col("event_id"), coalesce(col("error"), lit("quarantined")))
-          .as("message")))
+      tsCol: String): Unit =
+    catalog.append(spark, "logs", quarantined.select(
+      col(tsCol).as("timestamp"),
+      lit("error").as("level"),
+      concat_ws(": ", col("event_id"), coalesce(col("error"), lit("quarantined")))
+        .as("message")))
 
-  /** L2 input with the reference's NOT NULL membership rule applied:
-    * member events whose content yields no membership are rejected by
-    * the reference's insert (schema.ts:45), so here they go to `logs`
-    * — never as a silent "" into the participants merge. Returns the
-    * clean rows in the participants-table shape. `roomState` is the
-    * persisted participants snapshot for SDK-faithful duplicate-name
-    * disambiguation scope (None on backfill: the corpus IS the state). */
-  private def participantsGated(spark: SparkSession, raw: DataFrame,
-      roomState: Option[DataFrame] = None): DataFrame = {
-    val (ok, bad) = Ingest.quarantine(Ingest.projectParticipant(raw, roomState))
-    quarantineToLogs(spark, bad, tsCol = "last_updated")
-    ok.drop("event_id", "error")
-  }
+  /** `df` unless it is empty: a clean batch commits no empty log segment. */
+  private def nonEmpty(df: DataFrame): Option[DataFrame] = Some(df).filterNot(_.isEmpty)
 
   /** Source-boundary dead letters (unparseable JSON lines from
     * [[Ingest.rawFromJsonLines]]): raw-shaped rows whose event_type
@@ -82,68 +102,45 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
     * short-circuits. */
   def backfillIfFirstRun(spark: SparkSession, raw: DataFrame): Boolean = {
     if (catalog.exists("messages")) return false
-    val messages = decrypted(spark, Ingest.messagesFromRaw(raw))
-    val (clean, quarantined) = Ingest.quarantine(messages)
-    catalog.upsert(spark, "messages", clean,
-      keys = Seq("event_id"), orderBy = Seq("timestamp", "id"))
-    quarantineToLogs(spark, quarantined)
-    val members = participantsGated(spark, raw)
-    if (!members.isEmpty)
-      catalog.upsert(spark, "participants", members,
-        keys = Seq("user_id", "room_id"), orderBy = Seq("joined_ts"),
-        changeCols = Some(Seq("display_name", "avatar_url", "membership")))
-    val rooms = Ingest.projectRooms(raw)
-    if (!rooms.isEmpty)
-      catalog.upsert(spark, "rooms", rooms,
-        keys = Seq("room_id"), orderBy = Seq("created_ts"),
-        changeCols = Some(Seq("name", "topic", "is_encrypted", "avatar_url")))
+    mergeMessages(spark, raw).foreach(quarantineToLogs(spark, _, "processed_at"))
+    mergeParticipants(spark, raw, roomState = None)
+      .foreach(quarantineToLogs(spark, _, "last_updated"))
+    mergeRooms(spark, raw)
     true
   }
 
-  /** Incremental micro-batch apply (the foreachBatch body of E2):
-    * decrypt → quarantine split → messages LWW-merge + participants/
-    * rooms change-detection merges + sync-token upsert (L8). */
+  /** Incremental micro-batch apply (the foreachBatch body of E2): the
+    * reference's three per-batch subscriptions (client.ts:259-284) as
+    * three chains over one raw frame, each writing its own table dir:
+    *
+    *  - messages: T1–T3 → decrypt (T8) → quarantine split → LWW-merge;
+    *  - participants: member-room collect → bucket-pruned `prior` read →
+    *    T4 → change-detection merge;
+    *  - rooms: T5 → change-detection merge.
+    *
+    * Guarantees:
+    *  - the chains touch disjoint table dirs, so they run concurrently
+    *    (no claim conflicts) via [[Pipeline.concurrently]]: jobs started
+    *    in a chain carry this thread's Spark local properties, so a
+    *    stream's job group reaches every writer job and `stop()` cancels
+    *    them. All three end before a failure is rethrown: no write
+    *    outlives a failed batch into its retry;
+    *  - dead letters are appended after the chains, one statement per
+    *    step, in step order (messages, then members): all rows of one
+    *    statement share one `current_timestamp()`, so one union would
+    *    reorder `Api.logsTail`;
+    *  - the sync-token upsert (L8) is the batch's last write.
+    *
+    * The caller owns read-once: [[Streaming]]'s full-ingest bodies hand
+    * in a persisted micro-batch, so the chains' jobs read and parse the
+    * source once between them. */
   def applyBatch(spark: SparkSession, raw: DataFrame, batchId: Long): Unit = {
-    val messages = decrypted(spark, Ingest.messagesFromRaw(raw))
-    val (clean, quarantined) = Ingest.quarantine(messages)
-    catalog.upsert(spark, "messages", clean,
-      keys = Seq("event_id"), orderBy = Seq("timestamp", "id"))
-    quarantineToLogs(spark, quarantined)
-    // T4 scope: disambiguate against live room state (the persisted
-    // snapshot ∪ this batch), as the SDK's calculateDisplayName does —
-    // not against the batch alone. The batch's member rooms are
-    // collected once (bounded by the micro-batch's own width, capped)
-    // and drive a bucket-pruned state read: a batch touching k rooms
-    // opens ≤ k buckets of the participants table, never the table. A
-    // batch with no member events skips the consult entirely; a
-    // pathologically wide batch (> MaxPrunedRooms distinct rooms) falls
-    // back to the full snapshot — the collect stays bounded either
-    // way, and at that width a scan-all is the better plan anyway.
-    val memberRooms = raw.filter(col("event_type") === "m.room.member"
-        && col("room_id").isNotNull)
-      .select("room_id").distinct()
-      .limit(Pipeline.MaxPrunedRooms + 1)
-      .collect().map(_.getString(0)).toSeq
-    val prior =
-      if (memberRooms.isEmpty || !catalog.exists("participants")) None
-      else if (memberRooms.size > Pipeline.MaxPrunedRooms)
-        Some(catalog.read(spark, "participants"))
-      // room list is already on the driver: besides the bucket-level
-      // pruning, hand the scan the exact IN predicate so parquet
-      // row-group stats can prune co-bucketed rooms too (the
-      // projection's semi join then has nothing left to drop)
-      else Some(catalog.readForKeys(spark, "participants", memberRooms)
-        .filter(col("room_id").isin(memberRooms: _*)))
-    val members = participantsGated(spark, raw, prior)
-    if (!members.isEmpty)
-      catalog.upsert(spark, "participants", members,
-        keys = Seq("user_id", "room_id"), orderBy = Seq("joined_ts"),
-        changeCols = Some(Seq("display_name", "avatar_url", "membership")))
-    val rooms = Ingest.projectRooms(raw)
-    if (!rooms.isEmpty)
-      catalog.upsert(spark, "rooms", rooms,
-        keys = Seq("room_id"), orderBy = Seq("created_ts"),
-        changeCols = Some(Seq("name", "topic", "is_encrypted", "avatar_url")))
+    val Seq(messageDead, memberDead, _) = Pipeline.concurrently(spark)(
+      () => mergeMessages(spark, raw),
+      () => mergeParticipants(spark, raw, roomStateFor(spark, raw)),
+      () => { mergeRooms(spark, raw); None })
+    messageDead.foreach(quarantineToLogs(spark, _, "processed_at"))
+    memberDead.foreach(quarantineToLogs(spark, _, "last_updated"))
     // L8: sync-token upsert — batch id plays the next_batch role.
     // Zero-padded so lexicographic order == numeric order (readers
     // tie-break on the token string when created_at collides).
@@ -153,5 +150,70 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
         .withColumn("created_at", current_timestamp())
         .select("id", "next_batch", "created_at"),
       keys = Seq("next_batch"), orderBy = Seq("created_at"))
+  }
+
+  /** The messages chain; returns its dead letters when there are any. */
+  private def mergeMessages(spark: SparkSession, raw: DataFrame): Option[DataFrame] = {
+    val (clean, quarantined) =
+      Ingest.quarantine(decrypted(spark, Ingest.messagesFromRaw(raw)))
+    catalog.upsert(spark, "messages", clean,
+      keys = Seq("event_id"), orderBy = Seq("timestamp", "id"))
+    nonEmpty(quarantined)
+  }
+
+  /** T4 scope: disambiguate against live room state (the persisted
+    * snapshot ∪ this batch), as the SDK's calculateDisplayName does —
+    * not against the batch alone. The batch's member rooms are
+    * collected once (bounded by the micro-batch's own width, capped)
+    * and drive a bucket-pruned state read: a batch touching k rooms
+    * opens ≤ k buckets of the participants table, never the table. A
+    * batch with no member events skips the consult entirely; a
+    * pathologically wide batch (> MaxPrunedRooms distinct rooms) falls
+    * back to the full snapshot — the collect stays bounded either way,
+    * and at that width a scan-all is the better plan anyway. The read
+    * is pinned to the segment files listed here, so it sees the same
+    * state however often it is evaluated. */
+  private def roomStateFor(spark: SparkSession, raw: DataFrame): Option[DataFrame] = {
+    val memberRooms = raw.filter(col("event_type") === "m.room.member"
+        && col("room_id").isNotNull)
+      .select("room_id").distinct()
+      .limit(Pipeline.MaxPrunedRooms + 1)
+      .collect().map(_.getString(0)).toSeq
+    if (memberRooms.isEmpty || !catalog.exists("participants")) None
+    else if (memberRooms.size > Pipeline.MaxPrunedRooms)
+      Some(catalog.read(spark, "participants"))
+    // room list is already on the driver: besides the bucket-level
+    // pruning, hand the scan the exact IN predicate so parquet
+    // row-group stats can prune co-bucketed rooms too (the
+    // projection's semi join then has nothing left to drop)
+    else Some(catalog.readForKeys(spark, "participants", memberRooms)
+      .filter(col("room_id").isin(memberRooms: _*)))
+  }
+
+  /** The participants chain (L2) with the reference's NOT NULL
+    * membership rule applied: member events whose content yields no
+    * membership are rejected by the reference's insert (schema.ts:45),
+    * so they are returned as dead letters — never merged as a silent "".
+    * `roomState` is the persisted participants snapshot for SDK-faithful
+    * duplicate-name disambiguation scope (None on backfill: the corpus
+    * IS the state). */
+  private def mergeParticipants(spark: SparkSession, raw: DataFrame,
+      roomState: Option[DataFrame]): Option[DataFrame] = {
+    val (ok, bad) = Ingest.quarantine(Ingest.projectParticipant(raw, roomState))
+    val dead = nonEmpty(bad)
+    val members = ok.drop("event_id", "error")
+    if (!members.isEmpty)
+      catalog.upsert(spark, "participants", members,
+        keys = Seq("user_id", "room_id"), orderBy = Seq("joined_ts"),
+        changeCols = Some(Seq("display_name", "avatar_url", "membership")))
+    dead
+  }
+
+  private def mergeRooms(spark: SparkSession, raw: DataFrame): Unit = {
+    val rooms = Ingest.projectRooms(raw)
+    if (!rooms.isEmpty)
+      catalog.upsert(spark, "rooms", rooms,
+        keys = Seq("room_id"), orderBy = Seq("created_ts"),
+        changeCols = Some(Seq("name", "topic", "is_encrypted", "avatar_url")))
   }
 }

@@ -86,9 +86,16 @@ object Cluster {
       .localCheckpoint(false)
     var comp = nodes.select(col("id"), col("id").as("comp"))
       .localCheckpoint(false)
+    // A NULL sum means "no labels" only when no label was counted; with
+    // labels present it is a decimal overflow (non-ANSI sum gives NULL),
+    // which must not read as "unchanged" and so as convergence. The
+    // count rides the same aggregate: no extra job.
     def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum(col("comp").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
+      val r = df.agg(sum(col("comp").cast("decimal(38,0)")), count(col("comp"))).head()
+      if (!r.isNullAt(0)) r.getDecimal(0)
+      else if (r.getLong(1) == 0L) java.math.BigDecimal.ZERO
+      else throw new ArithmeticException(
+        s"connectedComponents label sum overflowed decimal(38,0) over ${r.getLong(1)} labels")
     }
     var prevSum = labelSum(comp)
     var moved = true

@@ -115,6 +115,23 @@ class ClusterSpec extends AnyFunSuite {
     asg.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
   }
 
+  test("minlabel: a label-sum overflow fails loudly instead of reading as convergence") {
+    // With ANSI off, a decimal(38,0) sum that overflows is NULL. Three
+    // ids near 4e37 overflow it every round; read as "sum unchanged",
+    // the chain a-b-c would stop after one round with c labelled b.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    import s.implicits._
+    val ids = Seq(0, 1, 2).map(i => (BigInt(4) * BigInt(10).pow(37) + i).toString)
+    def dec(c: String) = col(c).cast("decimal(38,0)").as(c)
+    val nodes = ids.toDF("id").select(dec("id"))
+    val edges = Seq((ids(0), ids(1)), (ids(1), ids(2))).toDF("src", "dst")
+      .select(dec("src"), dec("dst"))
+    val e = intercept[ArithmeticException](
+      graft.ext.Cluster.connectedComponents(nodes, edges).collect())
+    assert(e.getMessage.contains("overflowed"), e.getMessage)
+  }
+
   test("incremental: old root survives a smaller-id new joiner (stability law)") {
     // old cluster {10, 11} rooted at 10; new doc 3 bridges into it.
     // Batch-mode would relabel the cluster 3; the incremental contract
