@@ -137,12 +137,14 @@ object Streaming {
   /** Run `body` over the micro-batch persisted, so the source is read
     * and parsed once however many jobs the body runs (without it, every
     * action re-runs the source scan: about 11 reads per event). The
-    * entry is dropped in a `finally`, on success and on failure alike.
-    * A micro-batch is bounded by `maxFilesPerTrigger`; the whole-corpus
-    * backfill never comes through here. */
+    * entry is dropped in a `finally`, on success and on failure alike,
+    * and the drop waits until the cached blocks are freed, so no block
+    * removal outlives the batch into the next one. A micro-batch is
+    * bounded by `maxFilesPerTrigger`; the whole-corpus backfill never
+    * comes through here. */
   private def readOnce(batch: DataFrame)(body: DataFrame => Unit): Unit = {
     val cached = batch.persist()
-    try body(cached) finally cached.unpersist()
+    try body(cached) finally cached.unpersist(blocking = true)
   }
 
   /** Blocking convenience: full-pipeline twin of [[runOnce]]. */
