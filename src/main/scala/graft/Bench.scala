@@ -59,7 +59,6 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // parsed BEFORE the warm-up so a typo'd env var fails immediately
     // with a clear message, not after minutes of JIT warm-up; clamped
     // to >=1 passes (zero would leave `best` empty and best(name)
@@ -75,19 +74,7 @@ object Bench {
     val BandMode = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("band")
     val Passes = intEnv("SPARK_GRAFT_BENCH_PASSES", if (BandMode) 4 else 5, 1)
     val ExtraHeavyPasses = intEnv("SPARK_GRAFT_BENCH_HEAVY_PASSES", 3, 0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cores = intEnv("SPARK_GRAFT_CPUS", 32, 1))
 
     val ordered0 = SparkEntry.queries.toSeq.sortBy(_._1)
     // band mode (and local iteration): SPARK_GRAFT_BENCH_ONLY=q1,q2
@@ -251,7 +238,7 @@ object Bench {
   }
 
   /** JSON string literal: quotes, backslashes and control chars escaped. */
-  private def jq(s: String): String = "\"" + s.flatMap {
+  private[graft] def jq(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"

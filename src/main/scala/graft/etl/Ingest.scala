@@ -156,8 +156,8 @@ object Ingest {
   def projectParticipant(raw: DataFrame,
       roomState: Option[DataFrame] = None): DataFrame = {
     graft.functions.Functions.install(raw.sparkSession)
-    // r22 (guide §4.4's duplicate-evaluation trap, measured via
-    // CosProbe): membership/displayname/avatar used to ride three
+    // r22 (guide §4.4's duplicate-evaluation trap, OPTIMIZATION_r22.md
+    // row 7): membership/displayname/avatar used to ride three
     // get_json_object calls, each inlined by CollapseProject into every
     // consuming expression — `dn` alone feeds truthy/base/stripped/
     // force, so content was Jackson-parsed several times per row

@@ -409,7 +409,8 @@ object MergeWriter {
         // append/merge into a thousands-bucket table from scheduling one
         // (mostly empty) task per bucket — measured at 1600 buckets the
         // cap cut a 3×6.4k-row append stack from 17.3 s to the ~2 s the
-        // 16-bucket layout pays (WriteSmoke, PLANS.md round 16)
+        // 16-bucket layout pays (PLANS.md round 16, "The smoke caught
+        // and fixed a real O(buckets) write overhead")
         val parts = math.min(bs.buckets,
           math.max(1, df.sparkSession.sparkContext.defaultParallelism * 4))
         val sorted = withB.repartition(parts, col(BucketCol))

@@ -152,8 +152,9 @@ object Bpe {
   /** The ONE corpus pass of BPE training: pre-token frequency counts
     * collapsed to the (piece, cnt, syms) VOCABULARY. Everything after
     * this touches only the vocabulary — the property that keeps the
-    * training loop tractable at 100 TB (BpeSmoke measures it: this
-    * pass grows ~K with the corpus, the rounds below stay ~flat).
+    * training loop tractable at 100 TB (PLANS.md round 20 §2 measured
+    * it at ×1/×10/×100: this pass grows ~K with the corpus, the rounds
+    * below stay ~flat).
     * `checkpoint = false` skips the materialization when the caller
     * consumes the vocabulary exactly once (the local trainer's
     * collect). */

@@ -47,12 +47,13 @@ object Cluster {
     ccWithRounds(nodes, edges, maxRounds)._1
 
   /** As [[connectedComponents]], also returning the round count — the
-    * scale smoke's evidence that rounds track DIAMETER, not size. Same
-    * code path: the public method delegates here. */
+    * evidence that rounds track DIAMETER, not size (PLANS.md round 17
+    * §11). Same code path: the public method delegates here. */
   private[graft] def ccWithRounds(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 64): (DataFrame, Int) = {
     // r22 loop shape (guide §2.4, r21 VERDICT item 1), every piece
-    // measured against the r21 formulation via LoopProbe at sf0.1:
+    // measured against the r21 formulation at sf0.1 (OPTIMIZATION_r22.md
+    // row 1 and "Negative results"):
     //
     //  - the symmetric edge set is materialized ONCE (it was re-derived
     //    from the pair frame every round: 2 scans + a union per round);
@@ -70,7 +71,7 @@ object Cluster {
     //    that is 1 job/round; the old eager-checkpoint + moved-count
     //    shape paid 2.
     //
-    // Measured (LoopProbe, 3 reps, min): r21 shape 1.83 s → this 1.31 s
+    // Measured (3 reps, min): r21 shape 1.83 s → this 1.31 s
     // on the ≥0.01 graph (6 rounds). NEGATIVE results, kept out
     // deliberately: pre-hash-partitioning the edge set by src so the
     // per-round join reuses its layout measured 2.50 s (the repartition
@@ -298,7 +299,8 @@ object Cluster {
   private def graph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
     // reuse barrier: localCheckpoint, KEPT after re-measuring the r21
-    // VERDICT item-5 alternatives on r22 code (ClusterProbe, min of 3):
+    // VERDICT item-5 alternatives on r22 code (min of 3; OPTIMIZATION_r22.md
+    // "Negative results"):
     // persist(DISK_ONLY)+count made clusters_incremental 5.35 → 9.12 s
     // and every cluster entry 15–70 % slower; MEMORY_AND_DISK 7.52 s —
     // the columnar cache build plus per-consumer re-analysis of the
@@ -620,7 +622,8 @@ object Cluster {
     // PRECISELY because the entry tags ALL rows with `keep`: a
     // `filter(rk = 1)` shape would let Catalyst plan
     // WindowGroupLimitExec (map-side partial top-1, skew-immune — the
-    // first ElectSmoke draft measured exactly that and was flat), but
+    // first draft of the PLANS.md round 19 §12 measurement saw exactly
+    // that and was flat), but
     // rank-limit pushdown cannot apply to an all-rows projection, so
     // the giant partition must fully sort on one task. Two-phase
     // salted election instead: phase 1 elects within
@@ -630,7 +633,7 @@ object Cluster {
     // back to tag all rows. The ordering key (quality DESC, doc_id
     // ASC) is a TOTAL order per cluster, so max-of-partial-maxes IS
     // the global max. Measured on a synthesized one-cluster corpus
-    // (ElectSmoke decades, identical keeper asserted): single-window
+    // (PLANS.md round 19 §12, identical keeper asserted): single-window
     // 0.29/1.24/16.08 s at 10⁵/10⁶/10⁷ vs salted 0.45/0.48/0.87 s —
     // 18.5× at 10⁷ and diverging. Hash-gated against the SAME DuckDB
     // oracle as `dedup_keeper_quality`, so the equivalence is

@@ -35,8 +35,8 @@ object Dedup {
     * against compact per-doc shingle ARRAYS (two pair-proportional
     * joins + size(array_intersect), no explode/groupBy) measured
     * SLOWER — 3.48 s vs 2.66 s for the verify stage at sf0.1
-    * (VerifyShapeProbe) and dedup_minhash_lsh 2.2 → 3.6 s end-to-end:
-    * the 82k candidate pairs each drag two ~50-element string arrays
+    * (OPTIMIZATION_r22.md "Negative results") and dedup_minhash_lsh
+    * 2.2 → 3.6 s end-to-end: the 82k candidate pairs each drag two ~50-element string arrays
     * through both joins and a per-pair hash-set build, where the
     * exploded shape ships narrow (id, shingle) rows into one partial-
     * aggregated count. The exploded formulation stays. */
@@ -51,7 +51,8 @@ object Dedup {
     * signature table of `dedup_minhash_lsh`. r21: ONE codegen pass per
     * document ([[graft.functions.MinHashSigs]]) replacing the previous
     * explode + 8×`min(md5(concat_ws('|', k, sh)))` hash aggregate —
-    * measured 1.65 s of the 3.13 s pair pipeline at sf0.1 (StageProbe),
+    * measured 1.65 s of the 3.13 s pair pipeline at sf0.1 (r21 probe,
+    * since retired; this comment is its only record),
     * mostly CodegenFallback shingle lambdas and eight per-row
     * MessageDigest allocations. Row set and every column are
     * bit-identical (MinHashSigsSpec gates it against the old
@@ -70,8 +71,9 @@ object Dedup {
     // the <3-token drop rides a CHEAP size() predicate, NOT
     // isNotNull(minhash_sigs(...)): a pushed-down isNotNull would
     // re-evaluate the whole expression in the filter — measured 2×
-    // per-row cost (SigsProbe; the guide §4.4 duplicate-evaluation
-    // trap). Same row set: minhash_sigs is NULL exactly on <3 tokens.
+    // per-row cost (r21 probe, since retired; this comment is its only
+    // record — the guide §4.4 duplicate-evaluation trap). Same row set:
+    // minhash_sigs is NULL exactly on <3 tokens.
     Tables.documents(s, dir)
       .withColumn("toks", expr(toksE))
       .filter(size($"toks") >= 3)
@@ -89,16 +91,15 @@ object Dedup {
       posexplode(array((0 until 8).map(k => col(s"h$k")): _*)).as(Seq("band", "h")))
 
   /** (doc_id, band, h): one row per min-hash band — the candidate-join
-    * key table. Exposed (not private) so the scale smoke can count
-    * band-collision candidate pairs with EXACTLY the code the query
-    * runs, not a reimplementation that could drift. */
+    * key table. Exposed (not private) so perfbench's corpus layer can
+    * count band-collision candidate pairs with EXACTLY the code the
+    * query runs, not a reimplementation that could drift. */
   def minhashBands(s: SparkSession, dir: String): DataFrame =
     bandsOf(minhashSigs(s, dir))
 
   /** (doc_id, simhash, band, bv): 4×15-bit Manku bands per doc — the
-    * candidate-join key table of `dedup_simhash`. Exposed for the scale
-    * smoke's candidate-pair counts (same code path as the query). */
-  def simhashBands(s: SparkSession, dir: String): DataFrame = {
+    * candidate-join key table of `dedup_simhash`. */
+  private def simhashBands(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // r21: ONE codegen pass per document (graft.functions.SimHashDoc)
     // replacing explode(array_distinct) → md5/conv per token →
@@ -362,8 +363,7 @@ object Dedup {
         // of 60 exploded rows per token. Same ties/threshold semantics
         // as the exhaustive oracle (counter > 0 sets the bit). The
         // tokenize → simhash60 → 4×15-bit banding lives in
-        // [[simhashBands]], shared with the scale smoke's candidate
-        // counter.
+        // [[simhashBands]].
         val banded = simhashBands(s, dir)
         val a = banded.select($"doc_id".as("a_id"), $"simhash".as("ha"), $"band", $"bv")
         val b = banded.select($"doc_id".as("b_id"), $"simhash".as("hb"), $"band", $"bv")
@@ -451,8 +451,8 @@ object Dedup {
         // the null norm both propagate; the zero-norm arm requires both
         // norms non-NULL, since NULL OR TRUE is TRUE). The per-pair round rides
         // round_hu — Spark round(_,4) bit-identically (FastRoundSpec)
-        // without RoundBase's per-row BigDecimal, which RoundProbe
-        // measured at 1.05 s of this query's 2.0 s (2M pair rows).
+        // without RoundBase's per-row BigDecimal, measured at 1.05 s of
+        // this query's 2.0 s (2M pair rows; OPTIMIZATION_r22.md row 5).
         val e = Tables.embeddings(s, dir)
           .select($"vec_id", $"embedding", pmod($"vec_id", lit(P)).as("blk"),
             sqrt(expr("dot_product(embedding, embedding)")).as("nrm"))

@@ -95,9 +95,9 @@ object Pq {
 
   // ---- persisted IVF-PQ index: the codes committed next to the cells.
   // `sim_ivfpq_topk` composes probe × ADC correctly but re-ENCODES the
-  // whole corpus in-plan per query (PqCdcSmoke: its ×100 wall tracks
-  // plain ADC because the n·m·k encode dominates) — the deployment
-  // shape encodes ONCE at index-build time and the probe reads only the
+  // whole corpus in-plan per query (PLANS.md round 20 §10: its ×100
+  // wall tracks plain ADC because the n·m·k encode dominates) — the
+  // deployment shape encodes ONCE at index-build time and the probe reads only the
   // probed cells' code rows. One table through the real MergeWriter
   // path, bucketed on the same string cell key as the IVF assignments
   // (the room_id discipline), so a probe's read is bucket-prunable to
@@ -474,7 +474,7 @@ object Pq {
     // one-quantizer setup). The probe restricts candidates to the
     // nprobe=2 cells of the COMMITTED IVF index; the ranking is m LUT
     // lookups + adds per candidate. This entry ENCODES THE CORPUS
-    // IN-PLAN (PqCdcSmoke measured that encode dominating at ×100) —
+    // IN-PLAN (PLANS.md round 20 §10: that encode dominates at ×100) —
     // it is the correctness baseline; the deployment read that streams
     // committed codes is `sim_ivfpq_persisted_topk` below, gated
     // against the SAME oracle. One committed quantizer serves both

@@ -38,9 +38,9 @@ object Profile {
     * plan holds no join. The previous all-in-one aggregate made Catalyst plan
     * the 6-way multi-distinct as a single Expand — every input row
     * expanded ×6 into one wide hash aggregate whose grouping state
-    * spans every column at once. Measured at sf0.1 (PairsProbe, min of
-    * 3): Expand shape 3.49 s vs 0.33 s (base pass) + 0.72 s (six
-    * per-column distincts) — and the per-column scans column-prune
+    * spans every column at once. Measured at sf0.1 (min of 3;
+    * OPTIMIZATION_r22.md row 3): Expand shape 3.49 s vs 0.33 s (base
+    * pass) + 0.72 s (six per-column distincts) — and the per-column scans column-prune
     * where the Expand scan reads all six at once. Values are
     * bit-identical: countDistinct is null-free in both shapes, the
     * formatting functions are unchanged. */

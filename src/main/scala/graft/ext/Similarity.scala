@@ -30,12 +30,11 @@ object Similarity {
     s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
   /** (vec_id, bucket): random-hyperplane signature buckets — planes are
-    * the first `planes` data vectors (deterministic sample). Exposed so
-    * the scale smoke can count per-bucket candidate pairs with the same
-    * code the query runs; `planes` is THE scale knob (candidates ~
+    * the first `planes` data vectors (deterministic sample). `planes`
+    * is THE scale knob (candidates ~
     * n²/2^planes, so planes grows with log₂ n to hold candidates-per-
     * vector constant — the registered query pins planes=8). */
-  def hyperplaneBuckets(s: SparkSession, dir: String, planes: Int): DataFrame = {
+  private def hyperplaneBuckets(s: SparkSession, dir: String, planes: Int): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, dir)
     val pl = e.filter($"vec_id" < planes)

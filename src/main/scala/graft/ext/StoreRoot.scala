@@ -2,6 +2,8 @@ package graft.ext
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.TimeUnit
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,29 +25,38 @@ import org.apache.spark.sql.functions._
   * the root from metadata alone; any mismatch (new files, rewritten
   * parquet, size/mtime drift) falls back to the full content scan and
   * rewrites the manifest. A regeneration that rewrites bytes changes
-  * size/mtime → rescan → reseed, so the cross-run staleness guard
-  * keeps its strength for every mutation a filesystem can observe;
-  * the only way past it is a content change that preserves byte size
-  * AND mtime, which no regeneration path here does. The r21 per-JVM
-  * memo stays on top (same rationale: regeneration never happens
-  * mid-JVM).
+  * size/mtime → rescan → reseed.
+  *
+  * Size and mtime alone miss a same-size rewrite whose mtime is set
+  * back (`touch -d`, `Files.setLastModifiedTime`). For `file:` paths
+  * the listing therefore also records the inode change time
+  * (`unix:ctime`), which every write, rename and mtime change moves
+  * and no user call can set. Other filesystems (HDFS, object stores)
+  * expose no ctime, so there the guard is still size + mtime; deleting
+  * the `<md5>.manifest` next to the stores forces the full scan. The
+  * r21 per-JVM memo stays on top (regeneration never happens mid-JVM).
   */
 private[ext] object StoreRoot {
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Cheap, job-free identity of the table's source files: sorted
-    * `path|size|mtimeMs` lines. Listing only — never reads data. None
-    * when a listed file cannot be stat'ed (it vanished after the
-    * listing, say): the caller then falls back to the full scan. */
+    * `path|size|mtimeMs` lines, plus `|ctimeNs` for `file:` paths.
+    * Listing only — never reads data. None when a listed file cannot be
+    * stat'ed (it vanished after the listing, say, or the platform has
+    * no unix attribute view): the caller then falls back to the full
+    * scan. */
   private def sourceMeta(df: DataFrame): Option[String] = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     try Some(df.inputFiles.sorted.map { f =>
       val p = new Path(f)
       val st = p.getFileSystem(conf).getFileStatus(p)
-      s"$f|${st.getLen}|${st.getModificationTime}"
+      val ctime = if (p.toUri.getScheme != "file") "" else "|" +
+        Files.getAttribute(Paths.get(p.toUri), "unix:ctime")
+          .asInstanceOf[FileTime].to(TimeUnit.NANOSECONDS)
+      s"$f|${st.getLen}|${st.getModificationTime}$ctime"
     }.mkString("\n"))
-    catch { case _: java.io.IOException => None }
+    catch { case _: java.io.IOException | _: UnsupportedOperationException => None }
   }
 
   def resolve(s: SparkSession, dir: String, envKey: String,

@@ -36,8 +36,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * batch law, lifted end-to-end).
   *
   * Scale notes: the per-batch cost is |delta|-proportional (delta pair
-  * generation + frontier-only iteration — the measured ScaleSmoke /
-  * ClusterSmoke decades), plus one bounded election window. The batch
+  * generation + frontier-only iteration — the decades PLANS.md round
+  * 18 §6 and §10 measured), plus one bounded election window. The batch
   * membership predicate rides `isInCollection` over the micro-batch's
   * ids up to [[MaxFreshIds]]; a backfill-sized batch falls back to the
   * left-semi-join probe ([[Dedup.minhashPairsDeltaIds]]) with the ids

@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
   * `round`). Spark's RoundBase computes
   * `BigDecimal.valueOf(d).setScale(scale, HALF_UP).doubleValue()` per
   * row — a string render plus two BigDecimal allocations, measured
-  * ~500 ns/row (RoundProbe r22: rounding 2M cosine rows cost 1.05 s of
-  * a 2.0 s query). The fast path replaces it with pure FP arithmetic
-  * wherever FP provably agrees, falling back to the exact BigDecimal
+  * ~500 ns/row (OPTIMIZATION_r22.md row 5: rounding 2M cosine rows
+  * cost 1.05 s of a 2.0 s query). The fast path replaces it with pure
+  * FP arithmetic wherever FP provably agrees, falling back to the exact BigDecimal
   * formula near decision boundaries:
   *
   *  - let a = |d|, z = a·10^scale (10^scale ≤ 1e8 is FP-exact, the

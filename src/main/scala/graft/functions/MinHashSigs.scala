@@ -30,10 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     count(*))
   * }}}
   *
-  * whose costs were measured (StageProbe, sf0.1): the CodegenFallback
-  * `transform`+`array_distinct` shingle lambda, the 1→|shingles| row
-  * explode, EIGHT separate `md5` expression evaluations per exploded
-  * row (each allocating a fresh MessageDigest inside commons-codec),
+  * whose costs were measured (r21 probe, since retired; sf0.1): the
+  * CodegenFallback `transform`+`array_distinct` shingle lambda, the
+  * 1→|shingles| row explode, EIGHT separate `md5` expression
+  * evaluations per exploded row (each allocating a fresh MessageDigest inside commons-codec),
   * and a hash aggregate — 1.65 s of the 3.13 s pair pipeline. Here:
   * one pass over the token array per row, a reused thread-local
   * MessageDigest, no explode, no aggregate, whole-stage codegen (the

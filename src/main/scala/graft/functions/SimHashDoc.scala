@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * previous explode produced no rows for — callers filter the NULLs so
   * the row set is identical).
   *
-  * r21 codegen replacement for [[graft.ext.Dedup.simhashBands]]'s
+  * r21 codegen replacement for `graft.ext.Dedup.simhashBands`'s
   * per-token pipeline
   *
   * {{{

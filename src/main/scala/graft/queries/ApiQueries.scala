@@ -227,7 +227,8 @@ object ApiQueries {
   }
 
   /** The deployment bucket layout under oracle gate: 16·16, the grown
-    * 16·K shape WriteSmoke/StateSmoke measure — not the default 16. */
+    * 16·K shape PLANS.md round 16 measured (write path and state
+    * consult decades) — not the default 16. */
   private val GrownBuckets = 256
 
   private val builtGrown = scala.collection.mutable.Set[String]()

@@ -14,7 +14,7 @@ class BenchRenderSpec extends AnyFunSuite {
   private val results = Seq(
     ("a_heavy", 2.5, None: Option[String]),
     ("b_cheap", 0.25, None: Option[String]),
-    ("c_dead", -1.0, Some("boom \"quoted\"\npath\\x")),
+    ("c_dead", -1.0, Some("boom \"quoted\"\t\r\npath\\x")),
     ("d_mid", 1.0, None: Option[String]))
 
   private val line = Bench.renderLine(results, Seq("d_mid" -> 2), 0.25, "/sf")
@@ -38,9 +38,10 @@ class BenchRenderSpec extends AnyFunSuite {
       s"total sums only successful reps: $line")
     assert(line.contains("\"calib_sec\":0.25"), line)
     assert(line.endsWith("\"sf\":\"/sf\"}"), line)
-    // the error message had a quote, a backslash and a NEWLINE — all
-    // must be escaped so the output stays ONE line
-    assert(!line.contains("\n"), s"control chars must be escaped: $line")
+    // the error message had a quote, a backslash, a TAB, a CR and a
+    // NEWLINE — all must be escaped so the output stays ONE line
+    assert(!line.exists(_ < ' '), s"control chars must be escaped: $line")
+    assert(line.contains("\\u0009\\u000d\\u000a"), s"control-char escapes: $line")
     assert(line.contains("\"errors\":{\"c_dead\":\"boom \\\"quoted\\\""),
       s"quote-escaped error text: $line")
     assert(line.contains("path\\\\x\"}"), s"backslash-escaped error text: $line")

@@ -218,94 +218,97 @@ class PipelineSpec extends AnyFunSuite {
     // over (persisted participants ∪ batch), with the batch superseding
     // a user's own persisted name — i.e. the post-batch roomState.
     // Persisted rows are NOT retro-renamed: the reference persists only
-    // the member each event is about (db.utils.ts:89-97).
-    val root = Files.createTempDirectory("graft-pipe-t4scope").toString
-    val cat = Catalog(root)
-    cat.bootstrap()
-    val pipe = Pipeline(cat)
+    // the member each event is about (db.utils.ts:89-97). The rendered
+    // names must not depend on the bucket layout the consult prunes by.
+    for (buckets <- Seq(16, 64)) {
+      val root = Files.createTempDirectory(s"graft-pipe-t4scope-b$buckets").toString
+      val cat = Catalog(root, messageBuckets = buckets)
+      cat.bootstrap()
+      val pipe = Pipeline(cat)
 
-    def falsy(room: String, user: String, ts: Long): Row =
-      Row(s"$$mem-$user-$room-$ts:x", room, user, "m.room.member", ts,
-        """{"displayname":42,"membership":"join"}""", null, false, false, null)
+      def falsy(room: String, user: String, ts: Long): Row =
+        Row(s"$$mem-$user-$room-$ts:x", room, user, "m.room.member", ts,
+          """{"displayname":42,"membership":"join"}""", null, false, false, null)
 
-    pipe.applyBatch(spark, raw(Seq(
-      member("!ra:x", "@a:x", 10L, "Alice"),
-      member("!rb:x", "@x:x", 11L, "Dup"),
-      member("!rb:x", "@y:x", 12L, "Dup"),
-      member("!rc:x", "@r:x", 13L, "Bob"),
-      member("!rd:x", "@j1:x", 14L, "Jos\u00E9"), // composed é
-      member("!re:x", "@solo:x", 15L, "Solo"),
-      falsy("!rf:x", "@f1:x", 16L),
-      member("!rg:x", "@g:x", 17L, "Alice")
-    )), batchId = 1L)
+      pipe.applyBatch(spark, raw(Seq(
+        member("!ra:x", "@a:x", 10L, "Alice"),
+        member("!rb:x", "@x:x", 11L, "Dup"),
+        member("!rb:x", "@y:x", 12L, "Dup"),
+        member("!rc:x", "@r:x", 13L, "Bob"),
+        member("!rd:x", "@j1:x", 14L, "Jos\u00E9"), // composed é
+        member("!re:x", "@solo:x", 15L, "Solo"),
+        falsy("!rf:x", "@f1:x", 16L),
+        member("!rg:x", "@g:x", 17L, "Alice")
+      )), batchId = 1L)
 
-    pipe.applyBatch(spark, raw(Seq(
-      member("!ra:x", "@b:x", 20L, "Alice"),       // collides with PERSISTED @a only
-      member("!rb:x", "@z:x", 21L, "Dup"),         // persisted rows are suffixed → key inversion
-      member("!rc:x", "@r:x", 22L, "Carol"),       // rename: @r's stale "Bob" must not count…
-      member("!rc:x", "@c:x", 23L, "Bob"),         // …so the new Bob is unique
-      member("!rd:x", "@j2:x", 24L, "José"), // decomposed é collides with persisted composed
-      member("!re:x", "@solo:x", 25L, "Solo"),     // own persisted row is no collision
-      falsy("!rf:x", "@f2:x", 26L),                // falsy↔falsy: sentinel keys never collide
-      member("!rf:x", "@f3:x", 27L, "ok"),
-      // a membership-less member event is REJECTED by the reference's
-      // insert (schema.ts:45): it must neither supersede its user's
-      // persisted name in the scope nor contribute its own name key
-      Row("$gbad:x", "!rg:x", "@g:x", "m.room.member", 28L,
-        """{"displayname":"Bob"}""", null, false, false, null),
-      member("!rg:x", "@h:x", 29L, "Alice"),       // collides with @g's PERSISTED "Alice"
-      // INTRA-batch rename: @m's superseded "X" is not in post-batch
-      // room state, so @n's "X" has no live twin and stays bare — only
-      // each member's LATEST clean row contributes a collision key
-      member("!rh:x", "@m:x", 40L, "X"),
-      member("!rh:x", "@m:x", 41L, "Y"),
-      member("!rh:x", "@n:x", 42L, "X"),
-      // …but a TRAILING quarantined event must not shadow the member's
-      // real latest clean name: @p's "Z" stays live (the membership-less
-      // row is rejected by the reference's insert), so @q's "Z" collides
-      member("!ri:x", "@p:x", 43L, "Z"),
-      Row("$pbad:x", "!ri:x", "@p:x", "m.room.member", 44L,
-        """{"displayname":"Renamed"}""", null, false, false, null),
-      member("!ri:x", "@q:x", 45L, "Z")
-    )), batchId = 2L)
+      pipe.applyBatch(spark, raw(Seq(
+        member("!ra:x", "@b:x", 20L, "Alice"),       // collides with PERSISTED @a only
+        member("!rb:x", "@z:x", 21L, "Dup"),         // persisted rows are suffixed → key inversion
+        member("!rc:x", "@r:x", 22L, "Carol"),       // rename: @r's stale "Bob" must not count…
+        member("!rc:x", "@c:x", 23L, "Bob"),         // …so the new Bob is unique
+        member("!rd:x", "@j2:x", 24L, "José"), // decomposed é collides with persisted composed
+        member("!re:x", "@solo:x", 25L, "Solo"),     // own persisted row is no collision
+        falsy("!rf:x", "@f2:x", 26L),                // falsy↔falsy: sentinel keys never collide
+        member("!rf:x", "@f3:x", 27L, "ok"),
+        // a membership-less member event is REJECTED by the reference's
+        // insert (schema.ts:45): it must neither supersede its user's
+        // persisted name in the scope nor contribute its own name key
+        Row("$gbad:x", "!rg:x", "@g:x", "m.room.member", 28L,
+          """{"displayname":"Bob"}""", null, false, false, null),
+        member("!rg:x", "@h:x", 29L, "Alice"),       // collides with @g's PERSISTED "Alice"
+        // INTRA-batch rename: @m's superseded "X" is not in post-batch
+        // room state, so @n's "X" has no live twin and stays bare — only
+        // each member's LATEST clean row contributes a collision key
+        member("!rh:x", "@m:x", 40L, "X"),
+        member("!rh:x", "@m:x", 41L, "Y"),
+        member("!rh:x", "@n:x", 42L, "X"),
+        // …but a TRAILING quarantined event must not shadow the member's
+        // real latest clean name: @p's "Z" stays live (the membership-less
+        // row is rejected by the reference's insert), so @q's "Z" collides
+        member("!ri:x", "@p:x", 43L, "Z"),
+        Row("$pbad:x", "!ri:x", "@p:x", "m.room.member", 44L,
+          """{"displayname":"Renamed"}""", null, false, false, null),
+        member("!ri:x", "@q:x", 45L, "Z")
+      )), batchId = 2L)
 
-    // wider than MaxPrunedRooms: the consult must fall back to the
-    // full snapshot with IDENTICAL semantics — the colliding room
-    // rides along in a batch of 4097+ distinct rooms
-    pipe.applyBatch(spark, raw(
-      member("!ra:x", "@wide:x", 30L, "Alice") +:
-        (0 until Pipeline.MaxPrunedRooms).map(i =>
-          member(s"!w$i:x", s"@w$i:x", 31L, s"W$i"))
-    ), batchId = 3L)
-    assert(cat.read(spark, "participants")
-      .filter(col("user_id") === "@wide:x").collect()(0)
-      .getAs[String]("display_name") == "Alice (@wide:x)",
-      "full-snapshot fallback must still disambiguate against state")
+      // wider than MaxPrunedRooms: the consult must fall back to the
+      // full snapshot with IDENTICAL semantics — the colliding room
+      // rides along in a batch of 4097+ distinct rooms
+      pipe.applyBatch(spark, raw(
+        member("!ra:x", "@wide:x", 30L, "Alice") +:
+          (0 until Pipeline.MaxPrunedRooms).map(i =>
+            member(s"!w$i:x", s"@w$i:x", 31L, s"W$i"))
+      ), batchId = 3L)
+      assert(cat.read(spark, "participants")
+        .filter(col("user_id") === "@wide:x").collect()(0)
+        .getAs[String]("display_name") == "Alice (@wide:x)",
+        s"b$buckets: full-snapshot fallback must still disambiguate against state")
 
-    val got = cat.read(spark, "participants")
-      .filter(!col("user_id").startsWith("@w"))
-      .select("room_id", "user_id", "display_name").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-    val want = Map(
-      ("!ra:x", "@a:x") -> "Alice", // persisted row not retro-renamed (reference-faithful)
-      ("!ra:x", "@b:x") -> "Alice (@b:x)",
-      ("!rb:x", "@x:x") -> "Dup (@x:x)",
-      ("!rb:x", "@y:x") -> "Dup (@y:x)",
-      ("!rb:x", "@z:x") -> "Dup (@z:x)",
-      ("!rc:x", "@r:x") -> "Carol",
-      ("!rc:x", "@c:x") -> "Bob",
-      ("!rd:x", "@j1:x") -> "Jos\u00E9",
-      ("!rd:x", "@j2:x") -> "José (@j2:x)",
-      ("!re:x", "@solo:x") -> "Solo",
-      ("!rf:x", "@f1:x") -> "@f1:x",
-      ("!rf:x", "@f2:x") -> "@f2:x",
-      ("!rf:x", "@f3:x") -> "ok",
-      ("!rg:x", "@g:x") -> "Alice", // quarantined rename never lands
-      ("!rg:x", "@h:x") -> "Alice (@h:x)", // @g's persisted row still counts
-      ("!rh:x", "@m:x") -> "Y",  // intra-batch rename: final name wins the merge
-      ("!rh:x", "@n:x") -> "X",  // @m's superseded "X" contributed no key
-      ("!ri:x", "@p:x") -> "Z (@p:x)",  // quarantined trailing rename never lands…
-      ("!ri:x", "@q:x") -> "Z (@q:x)")  // …so both live "Z"s collide
-    assert(got == want, s"got:\n${got.toSeq.sortBy(_._1).mkString("\n")}")
+      val got = cat.read(spark, "participants")
+        .filter(!col("user_id").startsWith("@w"))
+        .select("room_id", "user_id", "display_name").collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+      val want = Map(
+        ("!ra:x", "@a:x") -> "Alice", // persisted row not retro-renamed (reference-faithful)
+        ("!ra:x", "@b:x") -> "Alice (@b:x)",
+        ("!rb:x", "@x:x") -> "Dup (@x:x)",
+        ("!rb:x", "@y:x") -> "Dup (@y:x)",
+        ("!rb:x", "@z:x") -> "Dup (@z:x)",
+        ("!rc:x", "@r:x") -> "Carol",
+        ("!rc:x", "@c:x") -> "Bob",
+        ("!rd:x", "@j1:x") -> "Jos\u00E9",
+        ("!rd:x", "@j2:x") -> "José (@j2:x)",
+        ("!re:x", "@solo:x") -> "Solo",
+        ("!rf:x", "@f1:x") -> "@f1:x",
+        ("!rf:x", "@f2:x") -> "@f2:x",
+        ("!rf:x", "@f3:x") -> "ok",
+        ("!rg:x", "@g:x") -> "Alice", // quarantined rename never lands
+        ("!rg:x", "@h:x") -> "Alice (@h:x)", // @g's persisted row still counts
+        ("!rh:x", "@m:x") -> "Y",  // intra-batch rename: final name wins the merge
+        ("!rh:x", "@n:x") -> "X",  // @m's superseded "X" contributed no key
+        ("!ri:x", "@p:x") -> "Z (@p:x)",  // quarantined trailing rename never lands…
+        ("!ri:x", "@q:x") -> "Z (@q:x)")  // …so both live "Z"s collide
+      assert(got == want, s"b$buckets got:\n${got.toSeq.sortBy(_._1).mkString("\n")}")
+    }
   }
 }
