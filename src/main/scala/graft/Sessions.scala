@@ -11,6 +11,19 @@ import org.apache.spark.sql.SparkSession
   * runtime stats exactly as they would be on a 1000-executor cluster.
   */
 object Sessions {
+
+  /** Bound of Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`,
+    * default 100), a static conf fixed when the first session is built.
+    * The cache is an LRU over generated sources, so it must hold a whole
+    * pass's working set or it evicts each class before its next use and
+    * every repeat recompiles. Measured working sets: one sync stream run
+    * about 125 distinct sources, one `pipe_corpus_end2end` pass 135 (at
+    * 100 a warm pass recompiled 125 classes, here none), and one full
+    * `Bench` board pass over all 147 entries 2,115 (plus 111 for the
+    * catalog build before it; a second pass then compiled 44). The bound
+    * is about 1.8 times the board's 2,226, the largest set measured. */
+  val CodegenCacheEntries = 4000
+
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -37,6 +50,7 @@ object Sessions {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

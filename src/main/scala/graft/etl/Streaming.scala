@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, MicroBatch, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming ingest: the Spark re-expression of the
@@ -18,7 +18,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    and a cold start with an existing snapshot is the reference's
   *    "token present ⇒ skip initial fetch" branch (client.ts:304-314);
   *  - no watermark on the ingest path by design: the reference accepts
-  *    late events forever and upserts them (SURVEY §2.7 late-data row).
+  *    late events forever and upserts them (SURVEY §2.7 late-data row);
+  *  - every `foreachBatch` body runs in the caller's session: the
+  *    micro-batch is re-homed there ([[MicroBatch.rehome]]) before
+  *    anything reads it. Each streaming run plans in a fresh clone of the
+  *    session, with a fresh task class loader, and Spark's codegen cache
+  *    is keyed on the loader, so a body planned in the clone recompiled
+  *    every class on every run (about 180 per sync micro-batch; 10 once
+  *    re-homed, `CodegenReuseSpec`). The body is stateless, and the confs
+  *    the clone sets (CBO off, state-store and watermark settings pinned
+  *    from the offset log) equal the caller's defaults or only concern
+  *    stateful operators; the stream's job group is a thread property,
+  *    so the body's jobs keep it (`FullIngestBatchSpec`).
   */
 object Streaming {
 
@@ -51,7 +62,7 @@ object Streaming {
         // snapshot the incoming batch always wins, so a replayed batch
         // is idempotent but a late batch carrying an older event wins
         // over a newer snapshot row — exactly the reference's behavior.
-        MergeWriter.merge(batch.sparkSession, tableDir, batch,
+        MergeWriter.merge(spark, tableDir, MicroBatch.rehome(spark, batch),
           keys = Seq("event_id"), orderBy = Seq("timestamp", "id"),
           bucket = bucket)
         ()
@@ -116,7 +127,7 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        readOnce(batch)(body(_, batchId))
+        readOnce(MicroBatch.rehome(spark, batch))(body(_, batchId))
       }
       .start()
   }
@@ -183,7 +194,7 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.spark.sql.functions.col
-        readOnce(batch) { b =>
+        readOnce(MicroBatch.rehome(spark, batch)) { b =>
           pipeline.logCorrupt(b.sparkSession,
             b.filter(col("event_type") === "m.graft.corrupt"))
           body(b.filter(col("event_type") =!= "m.graft.corrupt"), batchId)

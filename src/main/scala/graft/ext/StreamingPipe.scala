@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.etl.MergeWriter
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, MicroBatch, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -89,7 +89,7 @@ object StreamingPipe {
     val q = src.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, batch, corpusDir, stateRoot, maxFreshIds)
+        applyBatch(spark, MicroBatch.rehome(spark, batch), corpusDir, stateRoot, maxFreshIds)
       }
       .trigger(Trigger.AvailableNow())
       .start()

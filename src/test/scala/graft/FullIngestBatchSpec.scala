@@ -6,15 +6,18 @@ import scala.jdk.CollectionConverters._
 import graft.etl._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The full-ingest micro-batch body's guarantees (Streaming.startFullIngest*,
-  * Pipeline.applyBatch): the micro-batch's source is read once; the
-  * three table chains run as the stream's jobs (its job group); a failed
-  * chain surfaces only after the others ended, with no sync token and no
-  * cache entry left behind; dead letters keep their step order in `logs`. */
+  * Pipeline.applyBatch): the micro-batch's source is read once; the body
+  * runs in the caller's session; the three table chains run as the
+  * stream's jobs (its job group); a failed chain surfaces only after the
+  * others ended, with no sync token and no cache entry left behind; dead
+  * letters keep their step order in `logs`. */
 class FullIngestBatchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.local(cores = 4, appName = "graft-batch-body")
 
@@ -115,6 +118,33 @@ class FullIngestBatchSpec extends AnyFunSuite {
       assert(stream.forall(_._2 == runId),
         s"jobs outside group $runId: ${stream.filterNot(_._2 == runId)}")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the micro-batch body plans and runs in the caller's session") {
+    val (src, ckpt, cat) = fresh("graft-body-session")
+    writeJsonl(src, "b0.jsonl", batchRows("a", 100L), Seq("""{"broken"""))
+    val seen = new ConcurrentLinkedQueue[(SparkSession, Boolean)]()
+    val marker = s"body_spec_marker_${System.nanoTime()}"
+    // the caller's listeners are copied into the stream's cloned session,
+    // so a body planned in the clone reports the clone here
+    val listener = new QueryExecutionListener {
+      private def add(qe: QueryExecution): Unit =
+        seen.add((qe.sparkSession, qe.analyzed.output.exists(_.name == marker)))
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Streaming.startFullIngestJsonl(spark, src.toString, ckpt.toString, Pipeline(cat, Some(crypto)))
+        .awaitTermination()
+      // delivered in order: once the marker arrives, the body's actions have
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.asScala.exists(_._2) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val body = seen.asScala.toSeq.filterNot(_._2).map(_._1)
+    assert(body.nonEmpty && body.forall(_ eq spark),
+      s"${body.count(_ ne spark)} of ${body.size} body actions ran outside the caller's session")
   }
 
   /** Batch 0 commits every table; the messages dir then records a

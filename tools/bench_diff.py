@@ -5,7 +5,14 @@ Usage:
     python3 tools/bench_diff.py OLD NEW [--threshold 1.2] [--min-sec 1.0]
                                         [--fail-on-regression]
 
-OLD / NEW are bench result files in either of two shapes:
+OLD / NEW are each one bench result file, or several joined by commas
+(OLD1,OLD2 NEW1,NEW2): several runs of one side are compared through
+their per-query medians, with the median calib_sec of the side. One run
+per side cannot tell a code change from run order (on a shared host the
+side that ran first was faster on the whole board, by up to 17 %), so
+alternate the sides' runs and pass them all.
+
+Each file is in either of two shapes:
 
   1. `bench.json` as written by graft.Bench — one JSON object with
      "queries" {name: sec}, "calib_sec", "errors", optionally "flaky".
@@ -161,10 +168,35 @@ def load_bench(path):
     raise SystemExit(f"{path}: unrecognized format (no 'queries' or 'tail' key)")
 
 
+def load_side(paths):
+    """One side's runs, comma-separated: a single run loads as is; for
+    several, each query's median over the runs that timed it and the
+    median calib_sec (None if any run lacks one)."""
+    runs = [load_bench(p) for p in paths.split(",")]
+    if len(runs) == 1:
+        return runs[0]
+    names = set().union(*(q for q, _, _ in runs))
+    q = {n: statistics.median(r[0][n] for r in runs if n in r[0]) for n in names}
+    calibs = [c for _, c, _ in runs]
+    calib = statistics.median(calibs) if None not in calibs else None
+    errors, flaky = {}, {}
+    for _, _, m in runs:
+        errors.update(m["errors"])
+        for n, k in m["flaky"].items():
+            flaky[n] = flaky.get(n, 0) + k
+    return q, calib, {
+        "source": f"median of {len(runs)} runs",
+        "partial": any(m["partial"] for _, _, m in runs),
+        "errors": errors,
+        "flaky": flaky,
+        "total": None,
+    }
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("old")
-    ap.add_argument("new")
+    ap.add_argument("old", help="bench result file(s), comma-separated")
+    ap.add_argument("new", help="bench result file(s), comma-separated")
     ap.add_argument("--threshold", type=float, default=1.2,
                     help="normalized ratio above which a >=min-sec entry is "
                          "flagged REGRESSION (default 1.2)")
@@ -193,8 +225,8 @@ def main():
         bands = {k: (float(v[0]), float(v[1])) for k, v in bf["bands"].items()}
         band_calib = bf.get("calib_sec")
 
-    old_q, old_c, old_m = load_bench(args.old)
-    new_q, new_c, new_m = load_bench(args.new)
+    old_q, old_c, old_m = load_side(args.old)
+    new_q, new_c, new_m = load_side(args.new)
 
     print(f"OLD {args.old}: {len(old_q)} queries [{old_m['source']}]"
           + (" — PARTIAL (truncated tail)" if old_m["partial"] else ""))

@@ -4,7 +4,8 @@ exits 0 printing OK, nonzero with the failing assertion otherwise.
 
 Covers the three load shapes (bench.json, wrapper with full line,
 wrapper with front-truncated tail), the calib normalization direction,
-the >=1s eligibility rule, and the missing-calib raw fallback — so an
+the >=1s eligibility rule, the missing-calib raw fallback, and the
+per-query medians over several runs per side — so an
 edit to the comparator the round-over-round adjudication leans on
 cannot silently invert a ratio or un-flag a regression.
 """
@@ -233,6 +234,29 @@ def main():
     p = run(bench({"a": 1.0, "dead": -1.0}, calib=0.1),
             bench({"a": 1.0, "dead": 2.0}, calib=0.1))
     assert "only in NEW (1): dead" in p.stdout, p.stdout
+
+    # 7. Two runs per side whose order disagrees: each side is faster
+    #    when it runs first (10 s first, 13 s second). Each single pair
+    #    flags the opposite way; the per-query medians over both runs
+    #    (comma-joined files) flag nothing, and calib is each side's median.
+    first, second = bench({"q": 10.0}, calib=0.1), bench({"q": 13.0}, calib=0.1)
+    assert "REGRESSION q" in run(first, second).stdout
+    assert "IMPROVED" in run(second, first).stdout
+    paths = []
+    for d in (first, second, second, first, bench({"q": 1.0}, calib=0.4)):
+        with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as f:
+            json.dump(d, f)
+            paths.append(f.name)
+    p = subprocess.run([sys.executable, TOOL, ",".join(paths[:2]), ",".join(paths[2:4]),
+                        "--fail-on-regression"], capture_output=True, text=True)
+    assert p.returncode == 0, p.stdout + p.stderr
+    assert "median of 2 runs" in p.stdout and "0 regression(s)" in p.stdout \
+        and "0 improved" in p.stdout, p.stdout
+    p = subprocess.run([sys.executable, TOOL, ",".join(paths[:3]), paths[4]],
+                       capture_output=True, text=True)
+    assert "calib_sec: old=0.1000  new=0.4000" in p.stdout, p.stdout
+    for f in paths:
+        os.unlink(f)
 
     print("bench_diff selftest OK")
 
