@@ -793,7 +793,7 @@ object MergeWriter {
     }
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  private[graft] def deleteRecursively(p: Path): Unit =
     walkAll(p).reverse.foreach(Files.deleteIfExists(_))
 
   /** Snapshot retention: keep the `keepVersions` most recent committed

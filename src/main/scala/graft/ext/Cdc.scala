@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.{Files, Paths}
-
 import graft.{QueryDef, Tables}
 import graft.etl.MergeWriter
 import org.apache.spark.sql.functions._
@@ -37,26 +35,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * the extended LLM-pipeline surface (builder brief).
   */
 object Cdc {
-
-  /** Spark-side cut positions: i ∈ [W, len−1] (1-based char positions;
-    * len excluded so the tail boundary never duplicates), kept when
-    * the window hash mod 64 is 0. Descending-sequence guard: documents
-    * shorter than W+1 produce no cuts.
-    *
-    * This HOF formulation is the INTERPRETED TWIN, kept for
-    * CdcCutsSpec's bit-for-bit equivalence gate: the registered
-    * entries route the scan through the native `cdc_cuts` expression
-    * ([[graft.functions.CdcCuts]] — r21: true O(1) rolling recurrence
-    * inside whole-stage codegen, replacing this O(W)-per-position
-    * CodegenFallback re-fold; the token_stats move applied to the CDC
-    * family). Both produce identical cut arrays, so the DuckDB oracle
-    * (an exact lambda replay of THIS formulation) is unchanged. */
-  private[graft] val cutsHofTwinE =
-    """CASE WHEN length(norm) >= 17 THEN
-         filter(sequence(16, length(norm) - 1), i ->
-           aggregate(transform(split(substr(norm, i - 15, 16), ''), c -> ascii(c)),
-             0L, (acc, x) -> (acc * 31 + x) % 2147483647) % 64 = 0)
-       ELSE CAST(array() AS array<int>) END"""
 
   /** (doc_id, chunk_idx, chunk_len, chunk_md5) for every chunk of every
     * non-empty document — the shared body of both entries. Takes any
@@ -120,37 +98,23 @@ object Cdc {
     StructField("chunk_md5", StringType),
     StructField("chunk_len", LongType)))
 
-  private val builtStore = scala.collection.mutable.Set[String]()
-
-  /** Store root keyed by sfDir + the corpus content fingerprint —
-    * the shared [[StoreRoot]] helper (memoized per JVM, ADVICE r20
-    * items 2/4: the probe entry no longer pays a corpus scan per
-    * invocation just to re-derive a root it already knows). */
   private def storeRoot(s: org.apache.spark.sql.SparkSession, dir: String): String =
     StoreRoot.resolve(s, dir, "GRAFT_CDC_STORE_DIR", "cdc-store",
-      Tables.documents, "doc_id", "text")
+      Tables.documents, "doc_id")
 
-  /** Build-once (_DONE-cached per corpus fingerprint) chunk-store
-    * commit: distinct (chunk_md5, chunk_len) through MergeWriter,
-    * bucketed on the md5 key. Returns the committed table dir. */
-  private[graft] def materializeChunkStore(s: org.apache.spark.sql.SparkSession, dir: String): String = synchronized {
+  /** The chunk-store commit: distinct (chunk_md5, chunk_len) through
+    * MergeWriter, bucketed on the md5 key. Returns the committed table
+    * dir. */
+  private[graft] def materializeChunkStore(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = storeRoot(s, dir)
     val cdir = s"$root/chunks"
-    if (!builtStore.contains(root)) {
-      val done = Paths.get(root, "_DONE")
-      if (!Files.exists(done)) {
-        Embeddings.deleteRecursively(Paths.get(root))
-        Files.createDirectories(Paths.get(cdir))
-        val store = chunks(s, dir)
-          .groupBy(col("chunk_md5"))
-          .agg(max(col("chunk_len")).cast("long").as("chunk_len"))
-        MergeWriter.merge(s, cdir, store,
-          keys = Seq("chunk_md5"), orderBy = Seq("chunk_len"),
-          bucket = Some(MergeWriter.BucketSpec("chunk_md5", 16)))
-        Files.createFile(done)
-        ()
-      }
-      builtStore += root
+    StoreRoot.once(root) {
+      val store = chunks(s, dir)
+        .groupBy(col("chunk_md5"))
+        .agg(max(col("chunk_len")).cast("long").as("chunk_len"))
+      MergeWriter.merge(s, cdir, store,
+        keys = Seq("chunk_md5"), orderBy = Seq("chunk_len"),
+        bucket = Some(MergeWriter.BucketSpec("chunk_md5", 16)))
     }
     cdir
   }

@@ -2,7 +2,6 @@ package graft.ext
 
 import graft.{QueryDef, Tables}
 import graft.etl.MergeWriter
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -173,54 +172,36 @@ object Embeddings {
     StructField("cell_key", org.apache.spark.sql.types.StringType)))
   private[graft] val IdxAsgBuckets = 8
 
-  private val builtIdx = scala.collection.mutable.Set[String]()
-
-  private[ext] def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val all = scala.util.Using.resource(Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toSeq)
-      all.foreach(Files.delete)
-    }
-
-  /** Root keyed by sfDir + cheap corpus fingerprint (count + max vec_id
-    * + an order-free CONTENT xor over the embedding arrays — so a
-    * testdata regeneration that keeps the shape but changes the vectors
-    * reseeds the index instead of probing a stale one). */
   private[ext] def idxRoot(s: SparkSession, dir: String): String =
     StoreRoot.resolve(s, dir, "GRAFT_ANN_INDEX_DIR", "ann-index",
-      Tables.embeddings, "vec_id", "embedding")
+      Tables.embeddings, "vec_id")
 
-  /** Build-once (per sfDir+fingerprint, _DONE-cached) IVF index commit:
-    * centroids from the label seed, one Lloyd assign step against them,
-    * both merged through MergeWriter (versioned segments + atomic
-    * pointer swap; assignments bucketed on cell). Returns
-    * (centroidsDir, assignmentsDir). */
-  private[graft] def materializeIndex(s: SparkSession, dir: String): (String, String) = synchronized {
+  /** The IVF index commit: centroids from the label seed, one Lloyd
+    * assign step against them, both merged through MergeWriter
+    * (versioned segments + atomic pointer swap; assignments bucketed on
+    * cell). Returns (centroidsDir, assignmentsDir). */
+  private[graft] def materializeIndex(s: SparkSession, dir: String): (String, String) = {
     val root = idxRoot(s, dir)
     val (cdir, adir) = (s"$root/centroids", s"$root/assignments")
-    if (!builtIdx.contains(root)) {
-      val done = Paths.get(root, "_DONE")
-      if (!Files.exists(done)) {
-        deleteRecursively(Paths.get(root))
-        Files.createDirectories(Paths.get(cdir))
-        Files.createDirectories(Paths.get(adir))
-        val e = Tables.embeddings(s, dir)
-        val cells = centroids(e)
-        MergeWriter.merge(s, cdir,
-          cells.select(col("label"), col("cv")),
-          keys = Seq("label"), orderBy = Seq("label"))
-        MergeWriter.merge(s, adir,
-          assign(e, cells).select(col("vec_id"), col("assigned").as("cell"),
-            concat(lit("c"), col("assigned")).as("cell_key")),
-          keys = Seq("vec_id"), orderBy = Seq("cell"),
-          bucket = Some(MergeWriter.BucketSpec("cell_key", IdxAsgBuckets)))
-        Files.createFile(done)
-        ()
-      }
-      builtIdx += root
+    StoreRoot.once(root) {
+      val e = Tables.embeddings(s, dir)
+      val cells = centroids(e)
+      MergeWriter.merge(s, cdir,
+        cells.select(col("label"), col("cv")),
+        keys = Seq("label"), orderBy = Seq("label"))
+      commitAsg(s, adir, e, cells)
     }
     (cdir, adir)
+  }
+
+  private def commitAsg(s: SparkSession, adir: String, vecs: DataFrame,
+      quantizer: DataFrame): Unit = {
+    MergeWriter.merge(s, adir,
+      assign(vecs, quantizer).select(col("vec_id"), col("assigned").as("cell"),
+        concat(lit("c"), col("assigned")).as("cell_key")),
+      keys = Seq("vec_id"), orderBy = Seq("cell"),
+      bucket = Some(MergeWriter.BucketSpec("cell_key", IdxAsgBuckets)))
+    ()
   }
 
   /** Corpus-growth index maintenance (the [[materializeIndex]] analog
@@ -231,38 +212,20 @@ object Embeddings {
     * behavior: an IVF quantizer is not retrained per batch, new data
     * joins existing cells — and merges them in (pure inserts; old rows
     * untouched). */
-  private[graft] def materializeIndexInc(s: SparkSession, dir: String): String = synchronized {
+  private[graft] def materializeIndexInc(s: SparkSession, dir: String): String = {
     val root = idxRoot(s, dir) + "-inc"
     val (cdir, adir) = (s"$root/centroids", s"$root/assignments")
-    if (!builtIdx.contains(root)) {
-      val done = Paths.get(root, "_DONE")
-      if (!Files.exists(done)) {
-        deleteRecursively(Paths.get(root))
-        Files.createDirectories(Paths.get(cdir))
-        Files.createDirectories(Paths.get(adir))
-        val e = Tables.embeddings(s, dir)
-        val isOld = pmod(col("vec_id"), lit(10)) < 7
-        val cells = centroids(e.filter(isOld))
-        MergeWriter.merge(s, cdir,
-          cells.select(col("label"), col("cv")),
-          keys = Seq("label"), orderBy = Seq("label"))
-        def commitAsg(vecs: DataFrame, quantizer: DataFrame): Unit = {
-          MergeWriter.merge(s, adir,
-            assign(vecs, quantizer).select(col("vec_id"),
-              col("assigned").as("cell"),
-              concat(lit("c"), col("assigned")).as("cell_key")),
-            keys = Seq("vec_id"), orderBy = Seq("cell"),
-            bucket = Some(MergeWriter.BucketSpec("cell_key", IdxAsgBuckets)))
-          ()
-        }
-        commitAsg(e.filter(isOld), cells)
-        // batch 2 consumes the COMMITTED quantizer, not the in-plan one
-        val committed = MergeWriter.readSnapshot(s, cdir, idxCentSchema)
-        commitAsg(e.filter(!isOld), committed)
-        Files.createFile(done)
-        ()
-      }
-      builtIdx += root
+    StoreRoot.once(root) {
+      val e = Tables.embeddings(s, dir)
+      val isOld = pmod(col("vec_id"), lit(10)) < 7
+      val cells = centroids(e.filter(isOld))
+      MergeWriter.merge(s, cdir,
+        cells.select(col("label"), col("cv")),
+        keys = Seq("label"), orderBy = Seq("label"))
+      commitAsg(s, adir, e.filter(isOld), cells)
+      // batch 2 consumes the COMMITTED quantizer, not the in-plan one
+      val committed = MergeWriter.readSnapshot(s, cdir, idxCentSchema)
+      commitAsg(s, adir, e.filter(!isOld), committed)
     }
     adir
   }

@@ -252,11 +252,10 @@ object Pipe {
     // multi-batch drain actually COMMITS. Build: drain three
     // interleaved deterministic micro-batches through
     // StreamingPipe.runOnce (Trigger.AvailableNow, per-batch MergeWriter
-    // merges incl. the absorbed-cluster cascade delete), once per
-    // (sfDir, corpus fingerprint); read back the committed asg + keeper
-    // snapshots. Gated surface is ARRIVAL-ORDER INVARIANT — raw
-    // streamed cluster ids depend on arrival history, so each keeper
-    // row is projected to (canonical component key = min doc_id over
+    // merges incl. the absorbed-cluster cascade delete); read back the
+    // committed asg + keeper snapshots. Gated surface is ARRIVAL-ORDER
+    // INVARIANT — raw streamed cluster ids depend on arrival history, so
+    // each keeper row is projected to (canonical component key = min doc_id over
     // its cluster, cluster size, keeper doc, quality). The oracle
     // re-derives the final keeper set FROM SCRATCH (DedupTau components
     // × gate × decon survivors × quality top-1), so: an orphan keeper

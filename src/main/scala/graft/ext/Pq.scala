@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.{Files, Paths}
-
 import graft.{QueryDef, Tables}
 import graft.etl.MergeWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -112,42 +110,32 @@ object Pq {
     StructField("code_2", IntegerType),
     StructField("code_3", IntegerType)))
 
-  private val builtPq = scala.collection.mutable.Set[String]()
-
-  /** Build-once (per sfDir+fingerprint, _DONE-cached) IVF-PQ index
-    * commit on top of [[Embeddings.materializeIndex]]: the committed
-    * quantizer serves as both the coarse cells and the PQ codebooks
-    * (by_residual=false), and each vector's 4 subspace codes are merged
-    * into a cell-bucketed codes table. Returns (centroidsDir, codesDir). */
-  private[graft] def materializePqIndex(s: SparkSession, dir: String): (String, String) = synchronized {
+  /** The IVF-PQ index commit on top of [[Embeddings.materializeIndex]]:
+    * the committed quantizer serves as both the coarse cells and the PQ
+    * codebooks (by_residual=false), and each vector's 4 subspace codes
+    * are merged into a cell-bucketed codes table. Returns (centroidsDir,
+    * codesDir). */
+  private[graft] def materializePqIndex(s: SparkSession, dir: String): (String, String) = {
     val (cdir, adir) = Embeddings.materializeIndex(s, dir)
     val root = Embeddings.idxRoot(s, dir) + "-pq"
     val pqdir = s"$root/codes"
-    if (!builtPq.contains(root)) {
-      val done = Paths.get(root, "_DONE")
-      if (!Files.exists(done)) {
-        Embeddings.deleteRecursively(Paths.get(root))
-        Files.createDirectories(Paths.get(pqdir))
-        import s.implicits._
-        val cents = MergeWriter.readSnapshot(s, cdir, Embeddings.idxCentSchema)
-        val asgT = MergeWriter.readSnapshot(s, adir, Embeddings.idxAsgSchema)
-        val wide = codes(Tables.embeddings(s, dir), cents, m = 4, w = 16)
-          .groupBy($"vec_id")
-          .agg(
-            max(when($"sub" === 0, $"code")).as("code_0"),
-            max(when($"sub" === 1, $"code")).as("code_1"),
-            max(when($"sub" === 2, $"code")).as("code_2"),
-            max(when($"sub" === 3, $"code")).as("code_3"))
-          .join(asgT, Seq("vec_id"))
-          .select($"vec_id", $"cell", $"cell_key",
-            $"code_0", $"code_1", $"code_2", $"code_3")
-        MergeWriter.merge(s, pqdir, wide,
-          keys = Seq("vec_id"), orderBy = Seq("cell"),
-          bucket = Some(MergeWriter.BucketSpec("cell_key", Embeddings.IdxAsgBuckets)))
-        Files.createFile(done)
-        ()
-      }
-      builtPq += root
+    StoreRoot.once(root) {
+      import s.implicits._
+      val cents = MergeWriter.readSnapshot(s, cdir, Embeddings.idxCentSchema)
+      val asgT = MergeWriter.readSnapshot(s, adir, Embeddings.idxAsgSchema)
+      val wide = codes(Tables.embeddings(s, dir), cents, m = 4, w = 16)
+        .groupBy($"vec_id")
+        .agg(
+          max(when($"sub" === 0, $"code")).as("code_0"),
+          max(when($"sub" === 1, $"code")).as("code_1"),
+          max(when($"sub" === 2, $"code")).as("code_2"),
+          max(when($"sub" === 3, $"code")).as("code_3"))
+        .join(asgT, Seq("vec_id"))
+        .select($"vec_id", $"cell", $"cell_key",
+          $"code_0", $"code_1", $"code_2", $"code_3")
+      MergeWriter.merge(s, pqdir, wide,
+        keys = Seq("vec_id"), orderBy = Seq("cell"),
+        bucket = Some(MergeWriter.BucketSpec("cell_key", Embeddings.IdxAsgBuckets)))
     }
     (cdir, pqdir)
   }

@@ -3,42 +3,49 @@ package graft.ext
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import graft.etl.MergeWriter
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared store-root resolution for every persisted-state operator
-  * family (dedup clusters, CDC chunk store, ANN/PQ indexes, streamed
-  * pipeline state): the root is keyed by the source dir AND a corpus
-  * content fingerprint (row count + max id + order-free
-  * bit_xor(xxhash64(id, content))), so a driver-side testdata
-  * regeneration — even one that keeps the shape but changes content —
-  * reseeds the store instead of probing a stale snapshot.
+/** The lifecycle of every persisted store (API catalogs, dedup
+  * assignments, streamed keeper state, CDC chunk store, ANN/PQ
+  * indexes): [[resolve]] names the store's root, [[once]] builds it.
   *
-  * r22 (VERDICT r21 item 4 — the fingerprint scan was a 100 TB
-  * scale-killer: four families × one full corpus scan per fresh JVM
-  * just to resolve a path): the fingerprint is now persisted in a
-  * MANIFEST next to the stores, validated against cheap source-file
-  * metadata (the scan's input file listing with per-file size +
-  * mtime — no Spark job, no data read). A matching manifest resolves
-  * the root from metadata alone; any mismatch (new files, rewritten
-  * parquet, size/mtime drift) falls back to the full content scan and
-  * rewrites the manifest. A regeneration that rewrites bytes changes
-  * size/mtime → rescan → reseed.
+  * Root identity. A root is keyed by the source dir AND a fingerprint
+  * of the table it derives from: row count + max id + an order-free
+  * `bit_xor(xxhash64(*))` over whole rows. A regeneration that keeps
+  * the shape but changes any column — text, vectors, labels, props —
+  * resolves to a new root instead of probing a stale one.
   *
-  * Size and mtime alone miss a same-size rewrite whose mtime is set
-  * back (`touch -d`, `Files.setLastModifiedTime`). For `file:` paths
-  * the listing therefore also records the inode change time
-  * (`unix:ctime`), which every write, rename and mtime change moves
-  * and no user call can set. Other filesystems (HDFS, object stores)
-  * expose no ctime, so there the guard is still size + mtime; deleting
-  * the `<md5>.manifest` next to the stores forces the full scan. The
-  * r21 per-JVM memo stays on top (regeneration never happens mid-JVM).
+  * The fingerprint is persisted in a `<md5(dir)>.manifest` next to the
+  * stores, validated against cheap source-file metadata: the scan's
+  * input file listing with per-file size + mtime, plus the inode change
+  * time (`unix:ctime`) for `file:` paths, which every write, rename and
+  * mtime change moves and no user call can set. A matching manifest
+  * resolves the root with no Spark job; any mismatch falls back to the
+  * full scan and rewrites the manifest. Other filesystems (HDFS, object
+  * stores) expose no ctime, so there the guard is size + mtime alone;
+  * deleting the manifest forces the full scan.
+  *
+  * Build once. `once(root)(build)` runs `build` only when `root` has
+  * no `_DONE` marker, wiping whatever a failed earlier build left
+  * there first, and writes `_DONE` only after `build` returns. A build
+  * that throws therefore leaves no marker, and the next call starts
+  * from an empty root.
+  *
+  * Memos and locks. Both the resolved roots and the finished builds are
+  * memoized per JVM (testdata is never regenerated mid-JVM). Builds
+  * lock per root, not on one monitor: builds nest (the PQ index builds
+  * the IVF index it reads), and a streamed build's micro-batches run on
+  * another thread.
   */
-private[ext] object StoreRoot {
+private[graft] object StoreRoot {
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val roots = new ConcurrentHashMap[String, String]()
+  private val built = ConcurrentHashMap.newKeySet[String]()
+  private val locks = new ConcurrentHashMap[String, AnyRef]()
 
   /** Cheap, job-free identity of the table's source files: sorted
     * `path|size|mtimeMs` lines, plus `|ctimeNs` for `file:` paths.
@@ -59,10 +66,12 @@ private[ext] object StoreRoot {
     catch { case _: java.io.IOException | _: UnsupportedOperationException => None }
   }
 
+  /** Root of the store derived from `table(s, dir)`, under `$envKey`
+    * (default `target/<defaultSubdir>` in the working dir). */
   def resolve(s: SparkSession, dir: String, envKey: String,
       defaultSubdir: String, table: (SparkSession, String) => DataFrame,
-      idCol: String, contentCol: String): String =
-    memo.computeIfAbsent(s"$envKey|$dir", _ => {
+      idCol: String): String =
+    roots.computeIfAbsent(s"$envKey|$dir", _ => {
       val parent = sys.env.getOrElse(envKey,
         new java.io.File(sys.props("user.dir"), s"target/$defaultSubdir").getPath)
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -77,7 +86,7 @@ private[ext] object StoreRoot {
       }
       val suffix = recorded.getOrElse {
         val r = df.agg(count(lit(1)), max(col(idCol)),
-          expr(s"bit_xor(xxhash64($idCol, $contentCol))")).collect()(0)
+          expr("bit_xor(xxhash64(*))")).collect()(0)
         val sfx =
           s"$md-n${r.getLong(0)}-m${r.getLong(1)}-x${java.lang.Long.toHexString(r.getLong(2))}"
         meta.foreach { m =>
@@ -91,4 +100,24 @@ private[ext] object StoreRoot {
       }
       s"$parent/$suffix"
     })
+
+  /** Runs `build` into `root` unless a finished build is already there;
+    * returns once `root` holds one. */
+  def once(root: String)(build: => Unit): Unit =
+    if (!built.contains(root)) locks.computeIfAbsent(root, _ => new AnyRef).synchronized {
+      if (!built.contains(root)) {
+        val done = Paths.get(root, "_DONE")
+        if (!Files.exists(done)) {
+          MergeWriter.deleteRecursively(Paths.get(root))
+          Files.createDirectories(Paths.get(root))
+          build
+          Files.createFile(done)
+        }
+        built.add(root)
+      }
+    }
+
+  /** Drops both per-JVM memos, as a fresh JVM starts: the next
+    * [[resolve]] re-checks the manifest, the next [[once]] the marker. */
+  private[graft] def forget(): Unit = { roots.clear(); built.clear() }
 }

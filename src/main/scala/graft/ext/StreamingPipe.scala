@@ -96,52 +96,31 @@ object StreamingPipe {
     q.awaitTermination()
   }
 
-  private val builtStreams = scala.collection.mutable.Set[String]()
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val all = scala.util.Using.resource(java.nio.file.Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toSeq)
-      all.foreach(java.nio.file.Files.delete)
-    }
-
-  /** Root keyed by sfDir + corpus fingerprint (count + max doc_id +
-    * order-free content xor — the Cluster.storeRoot discipline), so a
-    * testdata regeneration reseeds the streamed state. */
   private def streamRoot(s: SparkSession, dir: String): String =
     StoreRoot.resolve(s, dir, "GRAFT_STREAM_STORE_DIR", "stream-store",
-      graft.Tables.documents, "doc_id", "text")
+      graft.Tables.documents, "doc_id")
 
-  /** Build-once (per sfDir+fingerprint, _DONE-cached) streamed-drain
-    * state for `pipe_streaming_persisted`: the corpus arrives in three
-    * interleaved micro-batches (doc_id % 3 — small ids keep arriving in
-    * LATER batches, so the stable-old-root rule and the absorbed-cluster
-    * cascade both fire, not vacuously), drained through [[runOnce]]
+  /** The streamed-drain state for `pipe_streaming_persisted`: the
+    * corpus arrives in three interleaved micro-batches (doc_id % 3 —
+    * small ids keep arriving in LATER batches, so the stable-old-root
+    * rule and the absorbed-cluster cascade both fire, not vacuously),
+    * drained through [[runOnce]]
     * (Trigger.AvailableNow, checkpointed, real MergeWriter commits per
     * batch). Returns the state root holding the final asg + keeper
     * snapshots. The gated surface downstream is arrival-order INVARIANT
     * (canonical component key, size, keeper, quality — the
     * StreamingPipeSpec law), so file-listing order inside the drain
     * cannot perturb the oracle compare. */
-  private[graft] def materializeStreamed(s: SparkSession, dir: String): String = synchronized {
+  private[graft] def materializeStreamed(s: SparkSession, dir: String): String = {
     val root = streamRoot(s, dir)
     val stateRoot = s"$root/state"
-    if (!builtStreams.contains(root)) {
-      val done = java.nio.file.Paths.get(root, "_DONE")
-      if (!java.nio.file.Files.exists(done)) {
-        deleteRecursively(java.nio.file.Paths.get(root))
-        val src = s"$root/src"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-        val docs = graft.Tables.documents(s, dir).select(col("doc_id"))
-        for (b <- 0 to 2)
-          docs.filter(pmod(col("doc_id"), lit(3)) === b)
-            .coalesce(1).write.mode("append").parquet(src)
-        runOnce(s, src, s"$root/ckpt", stateRoot, dir)
-        java.nio.file.Files.createFile(done)
-        ()
-      }
-      builtStreams += root
+    StoreRoot.once(root) {
+      val src = s"$root/src"
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"))
+      for (b <- 0 to 2)
+        docs.filter(pmod(col("doc_id"), lit(3)) === b)
+          .coalesce(1).write.mode("append").parquet(src)
+      runOnce(s, src, s"$root/ckpt", stateRoot, dir)
     }
     stateRoot
   }

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * returns the array<int> of cut positions i ∈ [W, numChars−1]
   * (1-based character positions, W = 16) where the Rabin-Karp hash of
   * the W-character window ending at i satisfies `hash % 64 == 0` —
-  * exactly the positions [[graft.ext.Cdc]]'s interpreted twin
+  * exactly the positions the interpreted twin (CdcCutsSpec.cutsHofTwinE)
   *
   * {{{
   *   filter(sequence(16, length(norm) - 1), i ->

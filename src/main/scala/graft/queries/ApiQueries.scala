@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.etl.{Api, Catalog}
+import graft.ext.StoreRoot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,40 +45,16 @@ object ApiQueries {
   private val CutMs = java.time.Instant.parse("2024-01-16T00:00:00Z").toEpochMilli
   private val PageCutMs = java.time.Instant.parse("2024-01-25T00:00:00Z").toEpochMilli
 
-  private val builtDirs = scala.collection.mutable.Set[String]()
+  private def storeRoot(s: SparkSession, dir: String): String =
+    StoreRoot.resolve(s, dir, "GRAFT_API_CATALOG_DIR", "api-catalog",
+      Tables.events, "event_id")
 
-  private def catalogRoot(sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    sys.env.getOrElse("GRAFT_API_CATALOG_DIR", "/root/repo/target/api-catalog") + s"/$md"
-  }
-
-  /** Build (once per sfDir; cached on disk via a _DONE marker) and
-    * return the materialized catalog. */
-  def materialize(s: SparkSession, dir: String): Catalog = synchronized {
-    val root = catalogRoot(dir)
-    val cat = Catalog(root)
-    if (!builtDirs.contains(root)) {
-      val done = java.nio.file.Paths.get(root, "_DONE")
-      if (!java.nio.file.Files.exists(done)) {
-        deleteRecursively(java.nio.file.Paths.get(root))
-        build(s, dir, cat)
-        java.nio.file.Files.createFile(done)
-      }
-      builtDirs += root
-    }
+  /** The catalog materialized from `dir`'s events. */
+  def materialize(s: SparkSession, dir: String): Catalog = {
+    val cat = Catalog(storeRoot(s, dir))
+    StoreRoot.once(cat.root)(build(s, dir, cat))
     cat
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      // materialize + close the walk stream before deleting (leaked
-      // directory handles otherwise; same hygiene as MergeWriter)
-      val all = scala.util.Using.resource(java.nio.file.Files.walk(p))(
-        _.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toSeq)
-      all.foreach(java.nio.file.Files.delete)
-    }
 
   /** The deterministic events → messages-table derivation, shared by
     * the default-layout catalog and the grown-bucket one (the two MUST
@@ -169,8 +146,6 @@ object ApiQueries {
 
   private def api(s: SparkSession, dir: String): Api = Api(materialize(s, dir))
 
-  private val builtT4 = scala.collection.mutable.Set[String]()
-
   /** Second, tiny catalog for the T4 roomState-scope entry: TWO real
     * `Pipeline.applyBatch` micro-batches of member events with DISJOINT
     * user sets (dense @a…, then sparse @b…) over shared rooms — batch
@@ -179,18 +154,9 @@ object ApiQueries {
     * entry discriminates roomState scope from batch-only scope, and the
     * read exercises the bucket-pruned state consult AND the stored-name
     * key inversion through the real merge. */
-  def materializeT4(s: SparkSession, dir: String): Catalog = synchronized {
-    val root = catalogRoot(dir) + "-t4inc"
-    val cat = Catalog(root)
-    if (!builtT4.contains(root)) {
-      val done = java.nio.file.Paths.get(root, "_DONE")
-      if (!java.nio.file.Files.exists(done)) {
-        deleteRecursively(java.nio.file.Paths.get(root))
-        buildT4(s, dir, cat)
-        java.nio.file.Files.createFile(done)
-      }
-      builtT4 += root
-    }
+  def materializeT4(s: SparkSession, dir: String): Catalog = {
+    val cat = Catalog(storeRoot(s, dir) + "-t4inc")
+    StoreRoot.once(cat.root)(buildT4(s, dir, cat))
     cat
   }
 
@@ -231,26 +197,18 @@ object ApiQueries {
     * consult decades) — not the default 16. */
   private val GrownBuckets = 256
 
-  private val builtGrown = scala.collection.mutable.Set[String]()
-
   /** Third catalog: the SAME messages content as [[materialize]] but
     * committed at the GROWN bucket count, so the deployment layout's
     * correctness (bucket modulus, per-bucket sort, readForKey pruning,
     * incremental merge bucket selection) is hash-checked against the
     * layout-independent DuckDB twin every round instead of assumed
     * layout-neutral. */
-  def materializeGrown(s: SparkSession, dir: String): Catalog = synchronized {
-    val root = catalogRoot(dir) + s"-grown$GrownBuckets"
-    val cat = Catalog(root, messageBuckets = GrownBuckets)
-    if (!builtGrown.contains(root)) {
-      val done = java.nio.file.Paths.get(root, "_DONE")
-      if (!java.nio.file.Files.exists(done)) {
-        deleteRecursively(java.nio.file.Paths.get(root))
-        cat.bootstrap()
-        loadMessages(s, dir, cat)
-        java.nio.file.Files.createFile(done)
-      }
-      builtGrown += root
+  def materializeGrown(s: SparkSession, dir: String): Catalog = {
+    val cat = Catalog(storeRoot(s, dir) + s"-grown$GrownBuckets",
+      messageBuckets = GrownBuckets)
+    StoreRoot.once(cat.root) {
+      cat.bootstrap()
+      loadMessages(s, dir, cat)
     }
     cat
   }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * chunk scan):
   *
   *  1. BIT-FOR-BIT EQUIVALENCE with the interpreted HOF twin
-  *     ([[graft.ext.Cdc.cutsHofTwinE]]) — over the real documents
+  *     ([[CdcCutsSpec.cutsHofTwinE]]) — over the real documents
   *     table AND adversarial Unicode (multi-byte code points exercise
   *     the `ascii` = code-point assumption the rolling recurrence
   *     rests on; the DuckDB oracle replays the twin, so twin ≡ native
@@ -35,7 +35,7 @@ class CdcCutsSpec extends AnyFunSuite {
     val bad = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("norm", regexp_replace(lower(trim($"text")), "\\s+", " "))
       .filter(length($"norm") > 0)
-      .filter(!(expr("cdc_cuts(norm)") <=> expr(graft.ext.Cdc.cutsHofTwinE)))
+      .filter(!(expr("cdc_cuts(norm)") <=> expr(CdcCutsSpec.cutsHofTwinE)))
     assert(bad.count() == 0, "cdc_cuts diverged from the HOF twin on the corpus")
   }
 
@@ -65,7 +65,7 @@ class CdcCutsSpec extends AnyFunSuite {
           (103, "a😀b" * 12), (104, "")) ++
         (200 until 400).map(i => (i, randStr(1 + rnd.nextInt(120))))
     val df = rows.toDF("id", "norm")
-    val bad = df.filter(!(expr("cdc_cuts(norm)") <=> expr(graft.ext.Cdc.cutsHofTwinE)))
+    val bad = df.filter(!(expr("cdc_cuts(norm)") <=> expr(CdcCutsSpec.cutsHofTwinE)))
     val badRows = bad.collect()
     assert(badRows.isEmpty,
       s"cdc_cuts diverged on ${badRows.length} adversarial rows, e.g. ${badRows.take(3).mkString("; ")}")
@@ -132,4 +132,24 @@ class CdcCutsSpec extends AnyFunSuite {
     }
     assert(codegenStages.nonEmpty, s"not codegen'd:\n$plan")
   }
+}
+
+object CdcCutsSpec {
+
+  /** Spark-side cut positions: i ∈ [W, len−1] (1-based char positions;
+    * len excluded so the tail boundary never duplicates), kept when
+    * the window hash mod 64 is 0. Descending-sequence guard: documents
+    * shorter than W+1 produce no cuts.
+    *
+    * This HOF formulation is the INTERPRETED TWIN of the native
+    * `cdc_cuts` expression ([[graft.functions.CdcCuts]], an O(1)
+    * rolling recurrence inside whole-stage codegen) that the registered
+    * entries run. The DuckDB oracle is an exact lambda replay of THIS
+    * formulation, so twin ≡ native is what keeps the oracle valid. */
+  val cutsHofTwinE =
+    """CASE WHEN length(norm) >= 17 THEN
+         filter(sequence(16, length(norm) - 1), i ->
+           aggregate(transform(split(substr(norm, i - 15, 16), ''), c -> ascii(c)),
+             0L, (acc, x) -> (acc * 31 + x) % 2147483647) % 64 = 0)
+       ELSE CAST(array() AS array<int>) END"""
 }

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * an extension session and after `install` into a session that lacks
   * it, `install` is idempotent, a wrong argument count fails at
   * analysis naming the function, no other source file registers a
-  * function, and only `Sessions.scala` builds a SparkSession.
+  * function, only `Sessions.scala` builds a SparkSession, and only
+  * `StoreRoot.scala` marks a store built.
   */
 class FunctionTableSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.local(cores = 2, appName = "graft-functions")
@@ -66,7 +67,8 @@ class FunctionTableSpec extends AnyFunSuite {
   private val singleSites = Seq(
     Seq("createOrReplaceTempFunction", "injectFunction", "registerFunction") ->
       Set("Functions.scala", "GraftExtensions.scala"),
-    Seq("SparkSession.builder") -> Set("Sessions.scala"))
+    Seq("SparkSession.builder") -> Set("Sessions.scala"),
+    Seq("_DONE") -> Set("StoreRoot.scala"))
 
   test("no main source outside the table registers a SQL function") {
     val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")

@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Store-root resolution must survive source paths Hadoop leaves
   * unescaped and a source file that vanishes between listing and stat:
   * both fall back to the full fingerprint scan instead of throwing. A
-  * local rewrite that keeps a file's size and mtime must not reuse the
-  * manifest's stale fingerprint. */
+  * local rewrite that keeps a file's size and mtime, or one that
+  * changes only a column outside the id, must not reuse a stale
+  * fingerprint. `once` builds a root once per JVM and never leaves a
+  * failed build marked done. */
 class StoreRootSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.local(cores = 2, appName = "graft-storeroot")
 
@@ -23,7 +25,7 @@ class StoreRootSpec extends AnyFunSuite {
 
   private def resolve(dir: String, table: (SparkSession, String) => DataFrame,
       envKey: String = "GRAFT_STOREROOT_SPEC_DIR"): String =
-    StoreRoot.resolve(spark, dir, envKey, "storeroot-spec", table, "doc_id", "text")
+    StoreRoot.resolve(spark, dir, envKey, "storeroot-spec", table, "doc_id")
 
   test("a source dir containing a space resolves") {
     val dir = corpus(Files.createTempDirectory("graft store root"))
@@ -87,5 +89,73 @@ class StoreRootSpec extends AnyFunSuite {
     val after = resolve(dir.toString, table, envKey = "GRAFT_STOREROOT_SPEC_DIR_3")
     assert(after.contains("-n40-m40-x") && after != before,
       s"stale fingerprint reused after a same-size rewrite: $after")
+  }
+
+  test("a rewrite that permutes only a non-id column resolves to a new root") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-storeroot-labels").resolve("embeddings.parquet")
+    def write(label: Long => Int): Unit =
+      (1L to 40L).map(i => (i, Seq(i.toFloat, -i.toFloat), label(i)))
+        .toDF("vec_id", "embedding", "label")
+        .repartition(2).write.mode("overwrite").parquet(dir.toString)
+    val table = (s: SparkSession, d: String) => s.read.parquet(d)
+    def resolveVecs(envKey: String): String =
+      StoreRoot.resolve(spark, dir.toString, envKey, "storeroot-spec", table, "vec_id")
+    write(i => (i % 4).toInt)
+    val before = resolveVecs("GRAFT_STOREROOT_SPEC_DIR_4")
+    write(i => ((i + 1) % 4).toInt) // same ids and vectors, labels permuted
+    val after = resolveVecs("GRAFT_STOREROOT_SPEC_DIR_5")
+    assert(before.contains("-n40-m40-x") && after.contains("-n40-m40-x"), s"$before $after")
+    assert(after != before, s"stale fingerprint reused after a label-only rewrite: $after")
+  }
+
+  test("once: a second call in the same JVM does not run the build again") {
+    val root = Files.createTempDirectory("graft-storeroot-once").resolve("store").toString
+    var runs = 0
+    StoreRoot.once(root) { runs += 1 }
+    StoreRoot.once(root) { runs += 1 }
+    assert(runs == 1)
+    assert(Files.exists(java.nio.file.Paths.get(root, "_DONE")))
+  }
+
+  test("once: a build that throws leaves no _DONE; the next call wipes and rebuilds") {
+    val root = Files.createTempDirectory("graft-storeroot-fail").resolve("store")
+    val partial = root.resolve("partial")
+    val e = intercept[IllegalStateException] {
+      StoreRoot.once(root.toString) {
+        Files.createFile(partial)
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(e.getMessage == "build failed")
+    assert(Files.exists(partial) && !Files.exists(root.resolve("_DONE")))
+    var sawPartial = true
+    StoreRoot.once(root.toString) { sawPartial = Files.exists(partial) }
+    assert(!sawPartial, "the rebuild ran over the failed build's files")
+    assert(Files.exists(root.resolve("_DONE")) && !Files.exists(partial))
+  }
+
+  test("a regenerated events.parquet at the same path gets a new API catalog") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{concat, lit}
+    val dir = Files.createTempDirectory("graft-storeroot-api")
+    val events = dir.resolve("events.parquet").toString
+    val sample = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+      .orderBy("event_id").limit(60).collect()
+    val sampleDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(sample.toSeq, 1), sample.head.schema)
+    sampleDf.write.parquet(events)
+    val before = graft.queries.ApiQueries.materialize(spark, dir.toString)
+    // regeneration between runs: same path, new props, fresh JVM memos
+    sampleDf.withColumn("props", concat($"props", lit(" ")))
+      .write.mode("overwrite").parquet(events)
+    StoreRoot.forget()
+    val after = graft.queries.ApiQueries.materialize(spark, dir.toString)
+    try {
+      assert(after.root != before.root, s"stale catalog reused: ${after.root}")
+      val edited = after.read(spark, "messages").filter($"content".endsWith(" ")).count()
+      assert(edited == sample.length, s"$edited of ${sample.length} messages carry the new props")
+    } finally Seq(before.root, after.root).foreach(r =>
+      graft.etl.MergeWriter.deleteRecursively(java.nio.file.Paths.get(r)))
   }
 }
