@@ -245,7 +245,7 @@ final case class Catalog(root: String, messageBuckets: Int = 16) {
   /** One maintenance pass over every table: compact fragmented buckets /
     * append stacks, then vacuum old versions and unreferenced segments.
     * The streaming ingest calls this on a batch cadence
-    * (Streaming.startFullIngest) so storage stays bounded while the
+    * (Streaming.startFullIngestJsonl) so storage stays bounded while the
     * stream runs — a version per merge per micro-batch otherwise. */
   def maintain(spark: SparkSession, keepVersions: Int = 2): Unit =
     tables.keys.foreach { t =>

@@ -68,33 +68,27 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
       case None => messages
     }
 
-  /** Dead-letter rows are kept queryable — the reference persists the
-    * error column in-row (schema.ts:66); we land them in `logs`.
-    * `tsCol` names the quarantined frame's timestamp column (messages
-    * carry processed_at; participant rows carry last_updated). */
-  private def quarantineToLogs(spark: SparkSession, quarantined: DataFrame,
-      tsCol: String): Unit =
-    catalog.append(spark, "logs", quarantined.select(
-      col(tsCol).as("timestamp"),
-      lit("error").as("level"),
-      concat_ws(": ", col("event_id"), coalesce(col("error"), lit("quarantined")))
-        .as("message")))
-
   /** `df` unless it is empty: a clean batch commits no empty log segment. */
   private def nonEmpty(df: DataFrame): Option[DataFrame] = Some(df).filterNot(_.isEmpty)
 
-  /** Source-boundary dead letters (unparseable JSON lines from
-    * [[Ingest.rawFromJsonLines]]): raw-shaped rows whose event_type
-    * marks them corrupt — they never reach the message path (the T2
-    * filter would silently drop them), so the ingest wiring routes
-    * them here before applyBatch. */
-  def logCorrupt(spark: SparkSession, corruptRaw: DataFrame): Unit =
-    if (!corruptRaw.isEmpty)
-      catalog.append(spark, "logs", corruptRaw.select(
-        current_timestamp().as("timestamp"),
+  /** Dead-letter rows are kept queryable — the reference persists the
+    * error column in-row (schema.ts:66); we land them in `logs`, one
+    * statement per step, in step order: source-boundary rows (corrupt
+    * JSON lines), then messages, then members. All rows of one statement
+    * share one `current_timestamp()`, so one union would reorder
+    * `Api.logsTail`. A corrupt row is stamped now; a message row keeps
+    * its processed_at, a participant row its last_updated. */
+  private def writeDeadLetters(spark: SparkSession, corrupt: Option[DataFrame],
+      message: Option[DataFrame], member: Option[DataFrame]): Unit =
+    Seq((corrupt, current_timestamp(), "corrupt"),
+      (message, col("processed_at"), "quarantined"),
+      (member, col("last_updated"), "quarantined")).foreach { case (dead, ts, fallback) =>
+      dead.foreach(d => catalog.append(spark, "logs", d.select(
+        ts.as("timestamp"),
         lit("error").as("level"),
-        concat_ws(": ", col("event_id"), coalesce(col("error"), lit("corrupt")))
-          .as("message")))
+        concat_ws(": ", col("event_id"), coalesce(col("error"), lit(fallback)))
+          .as("message"))))
+    }
 
   /** First-run batch backfill from a raw-event DataFrame (S5 snapshot
     * branch). Incremental runs skip this exactly like the reference:
@@ -102,16 +96,16 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
     * short-circuits. */
   def backfillIfFirstRun(spark: SparkSession, raw: DataFrame): Boolean = {
     if (catalog.exists("messages")) return false
-    mergeMessages(spark, raw).foreach(quarantineToLogs(spark, _, "processed_at"))
-    mergeParticipants(spark, raw, roomState = None)
-      .foreach(quarantineToLogs(spark, _, "last_updated"))
+    val messageDead = mergeMessages(spark, raw)
+    val memberDead = mergeParticipants(spark, raw, roomState = None)
     mergeRooms(spark, raw)
+    writeDeadLetters(spark, None, messageDead, memberDead)
     true
   }
 
-  /** Incremental micro-batch apply (the foreachBatch body of E2): the
-    * reference's three per-batch subscriptions (client.ts:259-284) as
-    * three chains over one raw frame, each writing its own table dir:
+  /** Incremental micro-batch apply (the body of every E2 micro-batch):
+    * the reference's three per-batch subscriptions (client.ts:259-284)
+    * as three chains over one raw frame, each writing its own table dir:
     *
     *  - messages: T1–T3 → decrypt (T8) → quarantine split → LWW-merge;
     *  - participants: member-room collect → bucket-pruned `prior` read →
@@ -119,28 +113,32 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
     *  - rooms: T5 → change-detection merge.
     *
     * Guarantees:
+    *  - corrupt source rows ([[Ingest.rawFromJsonLines]] marks them
+    *    `m.graft.corrupt`) are split off first: the T2 filter would drop
+    *    them silently, and a dead letter must be queryable, never
+    *    invisible;
     *  - the chains touch disjoint table dirs, so they run concurrently
     *    (no claim conflicts) via [[Pipeline.concurrently]]: jobs started
     *    in a chain carry this thread's Spark local properties, so a
     *    stream's job group reaches every writer job and `stop()` cancels
     *    them. All three end before a failure is rethrown: no write
     *    outlives a failed batch into its retry;
-    *  - dead letters are appended after the chains, one statement per
-    *    step, in step order (messages, then members): all rows of one
-    *    statement share one `current_timestamp()`, so one union would
-    *    reorder `Api.logsTail`;
+    *  - dead letters are appended after the chains, in step order
+    *    (corrupt, messages, members: [[writeDeadLetters]]);
     *  - the sync-token upsert (L8) is the batch's last write.
     *
-    * The caller owns read-once: [[Streaming]]'s full-ingest bodies hand
-    * in a persisted micro-batch, so the chains' jobs read and parse the
-    * source once between them. */
-  def applyBatch(spark: SparkSession, raw: DataFrame, batchId: Long): Unit = {
+    * The caller owns read-once: [[Streaming.startFullIngestJsonl]] hands
+    * in a persisted micro-batch, so the split and the chains' jobs read
+    * and parse the source once between them. */
+  def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long): Unit = {
+    val corruptRow = col("event_type") === "m.graft.corrupt"
+    val corruptDead = nonEmpty(batch.filter(corruptRow))
+    val raw = batch.filter(!corruptRow)
     val Seq(messageDead, memberDead, _) = Pipeline.concurrently(spark)(
       () => mergeMessages(spark, raw),
       () => mergeParticipants(spark, raw, roomStateFor(spark, raw)),
       () => { mergeRooms(spark, raw); None })
-    messageDead.foreach(quarantineToLogs(spark, _, "processed_at"))
-    memberDead.foreach(quarantineToLogs(spark, _, "last_updated"))
+    writeDeadLetters(spark, corruptDead, messageDead, memberDead)
     // L8: sync-token upsert — batch id plays the next_batch role.
     // Zero-padded so lexicographic order == numeric order (readers
     // tie-break on the token string when created_at collides).

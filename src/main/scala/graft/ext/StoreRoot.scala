@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import graft.etl.MergeWriter
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -27,7 +29,9 @@ import org.apache.spark.sql.functions._
   * resolves the root with no Spark job; any mismatch falls back to the
   * full scan and rewrites the manifest. Other filesystems (HDFS, object
   * stores) expose no ctime, so there the guard is size + mtime alone;
-  * deleting the manifest forces the full scan.
+  * deleting the manifest forces the full scan. A manifest rewritten
+  * with a new fingerprint deletes the roots the old one named
+  * ([[retire]]), so a store parent keeps one generation per source dir.
   *
   * Build once. `once(root)(build)` runs `build` only when `root` has
   * no `_DONE` marker, wiping whatever a failed earlier build left
@@ -79,11 +83,11 @@ private[graft] object StoreRoot {
       val df = table(s, dir)
       val meta = sourceMeta(df)
       val manifest = Paths.get(parent, s"$md.manifest")
-      val recorded = meta.filter(_ => Files.exists(manifest)).flatMap { m =>
-        val lines = new String(Files.readAllBytes(manifest),
-          StandardCharsets.UTF_8).split("\n::\n", 2)
-        if (lines.length == 2 && lines(0) == m) Some(lines(1).trim) else None
-      }
+      // (source metadata, suffix) the manifest recorded, if any
+      val old = Some(manifest).filter(Files.exists(_)).map(m => new String(
+        Files.readAllBytes(m), StandardCharsets.UTF_8).split("\n::\n", 2))
+        .collect { case Array(m, sfx) => (m, sfx.trim) }
+      val recorded = for (m <- meta; (om, sfx) <- old if om == m) yield sfx
       val suffix = recorded.getOrElse {
         val r = df.agg(count(lit(1)), max(col(idCol)),
           expr("bit_xor(xxhash64(*))")).collect()(0)
@@ -95,11 +99,22 @@ private[graft] object StoreRoot {
           Files.write(tmp, s"$m\n::\n$sfx\n".getBytes(StandardCharsets.UTF_8))
           Files.move(tmp, manifest, StandardCopyOption.REPLACE_EXISTING,
             StandardCopyOption.ATOMIC_MOVE)
+          old.map(_._2).filter(_ != sfx).foreach(retire(parent, _))
         }
         sfx
       }
       s"$parent/$suffix"
     })
+
+  /** Deletes the roots a replaced manifest named: `<parent>/<suffix>`
+    * and its derived siblings `<parent>/<suffix>-*` (`-t4inc`,
+    * `-grown256`, `-inc`, `-pq`). Only the one suffix is touched, so the
+    * roots of other source dirs under the same parent stay. */
+  private def retire(parent: String, suffix: String): Unit =
+    Using.resource(Files.list(Paths.get(parent)))(_.iterator().asScala.toList)
+      .map(_.getFileName.toString)
+      .filter(n => n == suffix || n.startsWith(s"$suffix-"))
+      .foreach(n => MergeWriter.deleteRecursively(Paths.get(parent, n)))
 
   /** Runs `build` into `root` unless a finished build is already there;
     * returns once `root` holds one. */

@@ -1,9 +1,8 @@
 package graft.ext
 
-import graft.etl.MergeWriter
-import org.apache.spark.sql.{DataFrame, MicroBatch, SparkSession}
+import graft.etl.{MergeWriter, Streaming}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** STREAMING corpus pipeline (r18 VERDICT item 5) — the shape a
@@ -76,7 +75,7 @@ object StreamingPipe {
 
   /** Drain every available micro-batch from `srcDir` (parquet files of
     * `doc_id BIGINT` arrivals; one file ≈ one ingest chunk) through
-    * [[applyBatch]], checkpointed — the Streaming.runOnce discipline.
+    * [[applyBatch]], checkpointed, on [[graft.etl.Streaming.start]].
     * `maxFilesPerTrigger = 1` keeps one file per micro-batch so arrival
     * order is the on-disk file order. */
   def runOnce(spark: SparkSession, srcDir: String, ckpt: String,
@@ -86,14 +85,9 @@ object StreamingPipe {
       .schema(StructType(Seq(StructField("doc_id", LongType))))
       .option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, MicroBatch.rehome(spark, batch), corpusDir, stateRoot, maxFreshIds)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streaming.start(src, ckpt) { (batch, _) =>
+      applyBatch(spark, batch, corpusDir, stateRoot, maxFreshIds)
+    }.awaitTermination()
   }
 
   private def streamRoot(s: SparkSession, dir: String): String =

@@ -222,10 +222,8 @@ object RefQueries {
         import s.implicits._
         ev(s, dir)
           .select($"user_id").distinct()
-          .select($"user_id",
-            regexp_replace(
-              concat(lit("@u"), $"user_id", lit(":https://matrix.example.org")),
-              "^(.+?):https://matrix\\.(.+)$", "$1:$2").as("normalized"))
+          .select($"user_id", graft.etl.Ingest.normalizeUserId(
+            concat(lit("@u"), $"user_id", lit(":https://matrix.example.org"))).as("normalized"))
       },
       oracle = Some("""
         SELECT user_id,
@@ -241,8 +239,7 @@ object RefQueries {
         ev(s, dir)
           .select($"user_id").distinct()
           .select($"user_id",
-            split(concat(lit("@u"), $"user_id", lit(":example.org")), ":")
-              .getItem(1).as("domain"))
+            graft.etl.Ingest.userDomain(concat(lit("@u"), $"user_id", lit(":example.org"))).as("domain"))
       },
       oracle = Some("""
         SELECT user_id, split_part('@u' || user_id || ':example.org', ':', 2) AS domain

@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-/** Re-homes a `foreachBatch` micro-batch into the session that started
+/** Re-homes a streaming micro-batch into the session that started
   * the stream. `Dataset.ofRows` is package-private, hence this package.
   *
   * Each streaming query run plans its micro-batches in a clone of the

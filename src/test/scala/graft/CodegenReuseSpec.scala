@@ -45,10 +45,9 @@ class CodegenReuseSpec extends AnyFunSuite {
       ev("p", "@alice:x", "m.room.message", 4, """{"body":"plain"}"""),
       ev("e", "@alice:x", "m.room.message", 5,
         Decrypt.encryptRandomIv("""{"body":"secret"}""", key), enc = true))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Schemas.rawEvent)
-    val lines = df.select(to_json(struct(df.columns.map(col).toSeq: _*)))
-      .collect().map(_.getString(0)).toSeq :+ """{"broken"""
-    Files.write(dir.resolve(f"b$n%03d.jsonl"), lines.mkString("\n").getBytes)
+    RestartFixtures.writeJsonl(dir.toString, f"b$n%03d.jsonl",
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Schemas.rawEvent),
+      Seq("""{"broken"""))
   }
 
   test("a repeated sync micro-batch shape reuses the classes earlier stream runs compiled") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import graft.etl._
@@ -12,7 +12,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The full-ingest micro-batch body's guarantees (Streaming.startFullIngest*,
+/** The full-ingest micro-batch body's guarantees (Streaming.startFullIngestJsonl,
   * Pipeline.applyBatch): the micro-batch's source is read once; the body
   * runs in the caller's session; the three table chains run as the
   * stream's jobs (its job group); a failed chain surfaces only after the
@@ -49,21 +49,12 @@ class FullIngestBatchSpec extends AnyFunSuite {
   private def frame(rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Schemas.rawEvent)
 
-  private def writeJsonl(dir: Path, name: String, rows: Seq[Row], extra: Seq[String]): Int = {
-    val df = frame(rows)
-    val lines = df.select(to_json(struct(df.columns.map(col).toSeq: _*)))
-      .collect().map(_.getString(0)).toSeq ++ extra
-    Files.write(dir.resolve(name), lines.mkString("\n").getBytes)
-    lines.size
-  }
-
-  private def fresh(name: String): (Path, Path, Catalog) = {
+  private def fresh(name: String): (String, String, Catalog) = {
     val base = Files.createTempDirectory(name)
-    val src = base.resolve("src")
-    Files.createDirectories(src)
+    val src = Files.createDirectories(base.resolve("src")).toString
     val cat = Catalog(base.resolve("cat").toString)
     cat.bootstrap()
-    (src, base.resolve("ckpt"), cat)
+    (src, base.resolve("ckpt").toString, cat)
   }
 
   private def dataProgress(q: StreamingQuery) = q.recentProgress.filter(_.numInputRows > 0).toSeq
@@ -73,8 +64,8 @@ class FullIngestBatchSpec extends AnyFunSuite {
   test("read once: numInputRows equals the source's row count for a parquet micro-batch") {
     val (src, ckpt, cat) = fresh("graft-body-parquet")
     val rows = batchRows("a", 100L)
-    frame(rows).coalesce(1).write.mode("append").parquet(src.toString)
-    val q = Streaming.startFullIngest(spark, src.toString, ckpt.toString, Pipeline(cat, Some(crypto)))
+    RestartFixtures.writeJsonl(src, "b0.jsonl", frame(rows))
+    val q = Streaming.startFullIngestJsonl(spark, src, ckpt, Pipeline(cat, Some(crypto)))
     q.awaitTermination()
     val p = dataProgress(q)
     assert(p.map(_.numInputRows) == Seq(rows.size.toLong),
@@ -84,8 +75,8 @@ class FullIngestBatchSpec extends AnyFunSuite {
 
   test("read once: numInputRows equals the source's line count for a JSONL micro-batch") {
     val (src, ckpt, cat) = fresh("graft-body-jsonl")
-    val n = writeJsonl(src, "b0.jsonl", batchRows("a", 100L), Seq("""{"broken"""))
-    val q = Streaming.startFullIngestJsonl(spark, src.toString, ckpt.toString, Pipeline(cat, Some(crypto)))
+    val n = RestartFixtures.writeJsonl(src, "b0.jsonl", frame(batchRows("a", 100L)), Seq("""{"broken"""))
+    val q = Streaming.startFullIngestJsonl(spark, src, ckpt, Pipeline(cat, Some(crypto)))
     q.awaitTermination()
     val p = dataProgress(q)
     assert(p.map(_.numInputRows) == Seq(n.toLong),
@@ -94,7 +85,7 @@ class FullIngestBatchSpec extends AnyFunSuite {
 
   test("every job of a micro-batch carries the stream's job group") {
     val (src, ckpt, cat) = fresh("graft-body-group")
-    frame(batchRows("a", 100L)).coalesce(1).write.mode("append").parquet(src.toString)
+    RestartFixtures.writeJsonl(src, "b0.jsonl", frame(batchRows("a", 100L)))
     val seen = new ConcurrentLinkedQueue[(Int, String)]()
     val marker = s"body-spec-marker-${System.nanoTime()}"
     val listener = new SparkListener {
@@ -103,7 +94,7 @@ class FullIngestBatchSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val q = Streaming.startFullIngest(spark, src.toString, ckpt.toString, Pipeline(cat, Some(crypto)))
+      val q = Streaming.startFullIngestJsonl(spark, src, ckpt, Pipeline(cat, Some(crypto)))
       q.awaitTermination()
       // the listener bus delivers in order: once the marker job arrives,
       // every job of the stream has been seen
@@ -122,7 +113,7 @@ class FullIngestBatchSpec extends AnyFunSuite {
 
   test("the micro-batch body plans and runs in the caller's session") {
     val (src, ckpt, cat) = fresh("graft-body-session")
-    writeJsonl(src, "b0.jsonl", batchRows("a", 100L), Seq("""{"broken"""))
+    RestartFixtures.writeJsonl(src, "b0.jsonl", frame(batchRows("a", 100L)), Seq("""{"broken"""))
     val seen = new ConcurrentLinkedQueue[(SparkSession, Boolean)]()
     val marker = s"body_spec_marker_${System.nanoTime()}"
     // the caller's listeners are copied into the stream's cloned session,
@@ -135,7 +126,7 @@ class FullIngestBatchSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      Streaming.startFullIngestJsonl(spark, src.toString, ckpt.toString, Pipeline(cat, Some(crypto)))
+      Streaming.startFullIngestJsonl(spark, src, ckpt, Pipeline(cat, Some(crypto)))
         .awaitTermination()
       // delivered in order: once the marker arrives, the body's actions have
       spark.range(1).toDF(marker).collect()
@@ -180,13 +171,13 @@ class FullIngestBatchSpec extends AnyFunSuite {
   test("a failing micro-batch leaves no cache entry and no sync token") {
     val (src, ckpt, cat) = fresh("graft-body-fail-stream")
     val pipe = Pipeline(cat, Some(crypto))
-    writeJsonl(src, "b0.jsonl", batchRows("a", 100L), Nil)
-    Streaming.startFullIngestJsonl(spark, src.toString, ckpt.toString, pipe,
+    RestartFixtures.writeJsonl(src, "b0.jsonl", frame(batchRows("a", 100L)))
+    Streaming.startFullIngestJsonl(spark, src, ckpt, pipe,
       maxFilesPerTrigger = 1).awaitTermination()
     breakMessagesLayout(cat)
-    writeJsonl(src, "b1.jsonl", batchRows("b", 200L), Nil)
+    RestartFixtures.writeJsonl(src, "b1.jsonl", frame(batchRows("b", 200L)))
     val cachedBefore = numCached
-    val q = Streaming.startFullIngestJsonl(spark, src.toString, ckpt.toString, pipe,
+    val q = Streaming.startFullIngestJsonl(spark, src, ckpt, pipe,
       maxFilesPerTrigger = 1)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
@@ -199,8 +190,8 @@ class FullIngestBatchSpec extends AnyFunSuite {
 
   test("dead letters of one batch land in step order: corrupt < message < member") {
     val (src, ckpt, cat) = fresh("graft-body-order")
-    writeJsonl(src, "b0.jsonl", batchRows("a", 100L), Seq("""{"event_id": not json"""))
-    Streaming.startFullIngestJsonl(spark, src.toString, ckpt.toString, Pipeline(cat, Some(crypto)))
+    RestartFixtures.writeJsonl(src, "b0.jsonl", frame(batchRows("a", 100L)), Seq("""{"event_id": not json"""))
+    Streaming.startFullIngestJsonl(spark, src, ckpt, Pipeline(cat, Some(crypto)))
       .awaitTermination()
     val logs = cat.read(spark, "logs").select("timestamp", "message").collect()
       .map(r => r.getString(1) -> r.getTimestamp(0)).toSeq

@@ -68,7 +68,8 @@ class FunctionTableSpec extends AnyFunSuite {
     Seq("createOrReplaceTempFunction", "injectFunction", "registerFunction") ->
       Set("Functions.scala", "GraftExtensions.scala"),
     Seq("SparkSession.builder") -> Set("Sessions.scala"),
-    Seq("_DONE") -> Set("StoreRoot.scala"))
+    Seq("_DONE") -> Set("StoreRoot.scala"),
+    Seq("foreachBatch", "MicroBatch.rehome") -> Set("Streaming.scala"))
 
   test("no main source outside the table registers a SQL function") {
     val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")

@@ -1,14 +1,15 @@
 package graft
 
-import java.nio.file.Paths
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import graft.etl.{Catalog, Pipeline, Schemas, Streaming}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared raw-event fixture for the restart-resume contract: phase 1
-  * (the spec's session) and phase 2 (the forked probe JVM) must write
-  * bit-identical row shapes or the cross-phase LWW assertions would
-  * test fixture drift, not resume semantics. */
+/** Shared raw-event fixtures for the sync stream's specs. The restart
+  * contract's phase 1 (the spec's session) and phase 2 (the forked probe
+  * JVM) must write bit-identical row shapes, or the cross-phase LWW
+  * assertions would test fixture drift, not resume semantics. */
 object RestartFixtures {
   def rawRows(spark: SparkSession, ids: Range, tsBase: Long,
       backfill: Boolean = false): DataFrame = {
@@ -19,6 +20,17 @@ object RestartFixtures {
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), Schemas.rawEvent)
+  }
+
+  /** Writes `rows` as the file `dir/name` in the stream's wire format,
+    * one JSON object per line, then the raw `extra` lines (a corrupt
+    * line, say); returns the number of lines written. */
+  def writeJsonl(dir: String, name: String, rows: DataFrame,
+      extra: Seq[String] = Nil): Int = {
+    val lines = rows.select(to_json(struct(rows.columns.map(col).toSeq: _*)))
+      .collect().map(_.getString(0)).toSeq ++ extra
+    Files.write(Paths.get(dir, name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    lines.size
   }
 }
 
@@ -45,11 +57,11 @@ object RestartProbe {
       val cat = Catalog(base.resolve("cat").toString)
       val pipe = Pipeline(cat)
       // new data arrives while "down": 10 new + 5 replayed duplicates
-      RestartFixtures.rawRows(spark, 20 until 30, 2000L)
-        .coalesce(1).write.mode("append").parquet(src)
-      RestartFixtures.rawRows(spark, 0 until 5, 3000L)
-        .coalesce(1).write.mode("append").parquet(src)
-      Streaming.runFullOnce(spark, src, ckpt, pipe)
+      RestartFixtures.writeJsonl(src, "b1-new.jsonl",
+        RestartFixtures.rawRows(spark, 20 until 30, 2000L))
+      RestartFixtures.writeJsonl(src, "b1-replay.jsonl",
+        RestartFixtures.rawRows(spark, 0 until 5, 3000L))
+      Streaming.startFullIngestJsonl(spark, src, ckpt, pipe).awaitTermination()
 
       val msgs = cat.read(spark, "messages")
       require(msgs.count() == 30,

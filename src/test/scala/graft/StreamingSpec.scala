@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.etl.{Ingest, MergeWriter, Schemas, Streaming}
+import graft.etl.{Catalog, Ingest, MergeWriter, Pipeline, Schemas, Streaming}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,24 +13,31 @@ class StreamingSpec extends AnyFunSuite {
   private def rawRows(ids: Range, tsBase: Long, backfill: Boolean = false): DataFrame =
     RestartFixtures.rawRows(spark, ids, tsBase, backfill)
 
+  /** One AvailableNow run of the sync stream: everything now in `src`. */
+  private def ingest(s: SparkSession, src: String, ckpt: String, pipe: Pipeline): Unit =
+    Streaming.startFullIngestJsonl(s, src, ckpt, pipe).awaitTermination()
+
   test("ingest stream: filters, projection, merge, checkpoint resume") {
     val base = Files.createTempDirectory("graft-stream")
     val src = base.resolve("src").toString
     val ckpt = base.resolve("ckpt").toString
-    val table = base.resolve("messages").toString
     Files.createDirectories(Paths.get(src))
+    val cat = Catalog(base.resolve("cat").toString)
+    cat.bootstrap()
+    val pipe = Pipeline(cat)
+    val table = cat.dir("messages")
 
     // chunk 1: 20 messages + 5 backfill rows (must be dropped, T1)
-    rawRows(0 until 20, 1000L).write.mode("append").parquet(src)
-    rawRows(100 until 105, 50L, backfill = true).write.mode("append").parquet(src)
-    Streaming.runOnce(spark, src, ckpt, table)
+    RestartFixtures.writeJsonl(src, "c1-live.jsonl", rawRows(0 until 20, 1000L))
+    RestartFixtures.writeJsonl(src, "c1-backfill.jsonl", rawRows(100 until 105, 50L, backfill = true))
+    ingest(spark, src, ckpt, pipe)
     val after1 = MergeWriter.readSnapshot(spark, table, Schemas.messages)
     assert(after1.count() == 20, "backfill rows must be filtered out")
 
     // chunk 2: 10 new + 5 duplicate event_ids (late replays — upsert wins once)
-    rawRows(20 until 30, 2000L).write.mode("append").parquet(src)
-    rawRows(0 until 5, 3000L).write.mode("append").parquet(src)
-    Streaming.runOnce(spark, src, ckpt, table)
+    RestartFixtures.writeJsonl(src, "c2-new.jsonl", rawRows(20 until 30, 2000L))
+    RestartFixtures.writeJsonl(src, "c2-replay.jsonl", rawRows(0 until 5, 3000L))
+    ingest(spark, src, ckpt, pipe)
     val after2 = MergeWriter.readSnapshot(spark, table, Schemas.messages)
     assert(after2.count() == 30, "duplicates must merge, not append")
     // the replayed duplicates carry the newer timestamp (LWW)
@@ -41,13 +48,13 @@ class StreamingSpec extends AnyFunSuite {
 
     // restart with same checkpoint and no new files: nothing reprocessed
     val vBefore = MergeWriter.currentVersion(table)
-    Streaming.runOnce(spark, src, ckpt, table)
+    ingest(spark, src, ckpt, pipe)
     assert(MergeWriter.currentVersion(table) == vBefore,
       "checkpoint resume must not re-merge old files")
   }
 
   test("full ingest stream: decrypt, quarantine, 3 merges, sync token, checkpoint resume") {
-    import graft.etl.{Catalog, CryptoConfig, Decrypt, Pipeline}
+    import graft.etl.{CryptoConfig, Decrypt}
     import org.apache.spark.sql.functions._
     val base = Files.createTempDirectory("graft-fullstream")
     val src = base.resolve("src").toString
@@ -60,11 +67,11 @@ class StreamingSpec extends AnyFunSuite {
     val pipe = Pipeline(cat, Some(crypto))
     val key = Decrypt.deriveKey("stream-pass", "stream-salt".getBytes, 1000)
 
-    def rows(rs: Seq[Row]): DataFrame = spark.createDataFrame(
-      spark.sparkContext.parallelize(rs, 1), Schemas.rawEvent)
+    def batch(name: String, rs: Seq[Row]): Unit = RestartFixtures.writeJsonl(src, name,
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, 1), Schemas.rawEvent))
 
     // micro-batch 1: room state + membership + plaintext + encrypted
-    rows(Seq(
+    batch("b1.jsonl", Seq(
       Row("$st-create:x", "!r1:x", "@admin:x", "m.room.create", 1L,
         """{"creator":"@a:x"}""", null, false, false, null),
       Row("$st-name:x", "!r1:x", "@admin:x", "m.room.name", 2L,
@@ -76,8 +83,8 @@ class StreamingSpec extends AnyFunSuite {
       Row("$e1:x", "!r1:x", "@alice:x", "m.room.message", 110L,
         Decrypt.encryptRandomIv("""{"msgtype":"m.text","body":"secret"}""", key),
         null, true, false, null)
-    )).coalesce(1).write.mode("append").parquet(src)
-    Streaming.runFullOnce(spark, src, ckpt, pipe)
+    ))
+    ingest(spark, src, ckpt, pipe)
 
     assert(cat.read(spark, "messages").count() == 2)
     assert(cat.read(spark, "messages").filter(col("event_id") === "$e1:x")
@@ -90,7 +97,7 @@ class StreamingSpec extends AnyFunSuite {
     // micro-batch 2: tampered ciphertext (→ quarantine) + late duplicate
     val goodCt = Decrypt.encryptRandomIv("""{"body":"x"}""", key)
     val tampered = goodCt.updated(20, if (goodCt(20) == 'A') 'B' else 'A')
-    rows(Seq(
+    batch("b2.jsonl", Seq(
       Row("$e2:x", "!r1:x", "@bob:x", "m.room.message", 200L,
         tampered, null, true, false, null),
       Row("$p1:x", "!r1:x", "@alice:x", "m.room.message", 500L,
@@ -100,8 +107,8 @@ class StreamingSpec extends AnyFunSuite {
       // foreachBatch wiring, not just in direct applyBatch calls
       Row("$mem-b:x", "!r1:x", "@alice2:x", "m.room.member", 210L,
         """{"displayname":"Alice","membership":"join"}""", null, false, false, null)
-    )).coalesce(1).write.mode("append").parquet(src)
-    Streaming.runFullOnce(spark, src, ckpt, pipe)
+    ))
+    ingest(spark, src, ckpt, pipe)
 
     val msgs = cat.read(spark, "messages")
     assert(msgs.count() == 2, "tampered row quarantined; duplicate merged not appended")
@@ -119,7 +126,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // checkpoint resume with no new files reprocesses nothing
     val vBefore = MergeWriter.currentVersion(cat.dir("messages"))
-    Streaming.runFullOnce(spark, src, ckpt, pipe)
+    ingest(spark, src, ckpt, pipe)
     assert(MergeWriter.currentVersion(cat.dir("messages")) == vBefore,
       "checkpoint resume must not re-merge old files")
   }
@@ -136,7 +143,6 @@ class StreamingSpec extends AnyFunSuite {
     // and every in-memory pipeline object — so the only state carried
     // across the "crash" is the durable checkpoint + catalog dirs,
     // which is exactly the contract under test.
-    import graft.etl.{Catalog, Pipeline}
     import org.apache.spark.sql.functions._
     val base = Files.createTempDirectory("graft-restart")
     val src = base.resolve("src").toString
@@ -146,8 +152,8 @@ class StreamingSpec extends AnyFunSuite {
     // --- session A: ingest 20 messages, then "crash"
     val catA = Catalog(base.resolve("cat").toString)
     catA.bootstrap()
-    rawRows(0 until 20, 1000L).coalesce(1).write.mode("append").parquet(src)
-    Streaming.runFullOnce(spark, src, ckpt, Pipeline(catA))
+    RestartFixtures.writeJsonl(src, "b0.jsonl", rawRows(0 until 20, 1000L))
+    ingest(spark, src, ckpt, Pipeline(catA))
     assert(catA.read(spark, "messages").count() == 20)
     assert(catA.read(spark, "sync_state").count() == 1)
 
@@ -156,9 +162,9 @@ class StreamingSpec extends AnyFunSuite {
     val catB = Catalog(base.resolve("cat").toString)
     val pipeB = Pipeline(catB)
     // new data arrives while "down": 10 new + 5 replayed duplicates
-    rawRows(20 until 30, 2000L).coalesce(1).write.mode("append").parquet(src)
-    rawRows(0 until 5, 3000L).coalesce(1).write.mode("append").parquet(src)
-    Streaming.runFullOnce(spark2, src, ckpt, pipeB)
+    RestartFixtures.writeJsonl(src, "b1-new.jsonl", rawRows(20 until 30, 2000L))
+    RestartFixtures.writeJsonl(src, "b1-replay.jsonl", rawRows(0 until 5, 3000L))
+    ingest(spark2, src, ckpt, pipeB)
 
     val msgs = catB.read(spark2, "messages")
     assert(msgs.count() == 30,
@@ -175,7 +181,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // and a further restart with no new files reprocesses nothing
     val vBefore = MergeWriter.currentVersion(catB.dir("messages"))
-    Streaming.runFullOnce(spark2, src, ckpt, pipeB)
+    ingest(spark2, src, ckpt, pipeB)
     assert(MergeWriter.currentVersion(catB.dir("messages")) == vBefore,
       "idle restart must not re-merge old files")
   }
@@ -188,7 +194,6 @@ class StreamingSpec extends AnyFunSuite {
     // brand-new java process over the same checkpoint + catalog dirs:
     // nothing but the on-disk state can cross a process boundary, so a
     // green probe is the full restart contract with no sliver left.
-    import graft.etl.{Catalog, Pipeline}
     val base = Files.createTempDirectory("graft-restart-fork")
     val src = base.resolve("src").toString
     val ckpt = base.resolve("ckpt").toString
@@ -197,8 +202,8 @@ class StreamingSpec extends AnyFunSuite {
     // --- phase 1 (this JVM): ingest 20 messages, then "crash"
     val catA = Catalog(base.resolve("cat").toString)
     catA.bootstrap()
-    rawRows(0 until 20, 1000L).coalesce(1).write.mode("append").parquet(src)
-    Streaming.runFullOnce(spark, src, ckpt, Pipeline(catA))
+    RestartFixtures.writeJsonl(src, "b0.jsonl", rawRows(0 until 20, 1000L))
+    ingest(spark, src, ckpt, Pipeline(catA))
     assert(catA.read(spark, "messages").count() == 20)
     assert(catA.read(spark, "sync_state").count() == 1)
 
@@ -235,7 +240,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("maintenance cadence keeps versions and segments bounded across batches") {
-    import graft.etl.{Catalog, Pipeline}
     import scala.jdk.CollectionConverters._
     val base = Files.createTempDirectory("graft-maint")
     val src = base.resolve("src").toString
@@ -248,10 +252,9 @@ class StreamingSpec extends AnyFunSuite {
     // 6 single-file batches (maxFilesPerTrigger=1 → one micro-batch each);
     // maintenance every batch with retention 1 — the tightest cadence
     (0 until 6).foreach { b =>
-      rawRows(b * 10 until (b * 10 + 10), 1000L * (b + 1))
-        .coalesce(1).write.mode("append").parquet(src)
+      RestartFixtures.writeJsonl(src, s"b$b.jsonl", rawRows(b * 10 until (b * 10 + 10), 1000L * (b + 1)))
     }
-    Streaming.startFullIngest(spark, src, ckpt, pipe,
+    Streaming.startFullIngestJsonl(spark, src, ckpt, pipe,
       maxFilesPerTrigger = 1, maintainEvery = 1, keepVersions = 1)
       .awaitTermination()
 

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.etl.{Streaming, SyncStatus}
+import graft.etl.{Catalog, Pipeline, Streaming, SyncStatus}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,17 +11,15 @@ class SyncStatusSpec extends AnyFunSuite {
   test("listener captures started/progress/terminated for an ingest run") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-status")
-    val src = base.resolve("src").toString
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        org.apache.spark.sql.Row("$e1:x", "!r:x", "@u:x", "m.room.message",
-          1L, "{}", null, false, false, null)), 1),
-      etl.Schemas.rawEvent).write.parquet(src)
+    val src = Files.createDirectories(base.resolve("src")).toString
+    RestartFixtures.writeJsonl(src, "b0.jsonl", RestartFixtures.rawRows(spark, 0 until 1, 1L))
+    val cat = Catalog(base.resolve("cat").toString)
+    cat.bootstrap()
 
     val status = new SyncStatus().attach(spark)
     try {
-      Streaming.runOnce(spark, src, base.resolve("ckpt").toString,
-        base.resolve("messages").toString)
+      Streaming.startFullIngestJsonl(spark, src, base.resolve("ckpt").toString,
+        Pipeline(cat)).awaitTermination()
       // listener events are delivered asynchronously
       val deadline = System.nanoTime() + 10_000_000_000L
       var statuses = Set.empty[String]

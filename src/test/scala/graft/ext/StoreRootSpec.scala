@@ -1,6 +1,6 @@
 package graft.ext
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -107,6 +107,28 @@ class StoreRootSpec extends AnyFunSuite {
     val after = resolveVecs("GRAFT_STOREROOT_SPEC_DIR_5")
     assert(before.contains("-n40-m40-x") && after.contains("-n40-m40-x"), s"$before $after")
     assert(after != before, s"stale fingerprint reused after a label-only rewrite: $after")
+  }
+
+  test("a rewritten source retires the superseded root and its derived siblings") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-storeroot-retire").resolve("documents.parquet")
+    def write(n: Long): Unit = (1L to n).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(dir.toString)
+    val table = (s: SparkSession, d: String) => s.read.parquet(d)
+    write(40L)
+    val before = resolve(dir.toString, table, envKey = "GRAFT_STOREROOT_SPEC_DIR_6")
+    val stale = Seq(before, s"$before-t4inc", s"$before-pq")
+    stale.foreach(r => StoreRoot.once(r)(Files.createFile(Paths.get(r, "data"))))
+    // a root of the same source dir that the manifest does not name
+    val unnamed = Files.createDirectories(
+      Paths.get(before.take(before.lastIndexOf("-n40-")) + "-n1-m1-x0"))
+    write(41L)
+    val after = resolve(dir.toString, table, envKey = "GRAFT_STOREROOT_SPEC_DIR_7")
+    try {
+      assert(after.contains("-n41-m41-x"), after)
+      stale.foreach(r => assert(!Files.exists(Paths.get(r)), s"superseded root left behind: $r"))
+      assert(Files.isDirectory(unnamed), s"a root the manifest did not name was deleted: $unnamed")
+    } finally graft.etl.MergeWriter.deleteRecursively(unnamed)
   }
 
   test("once: a second call in the same JVM does not run the build again") {
