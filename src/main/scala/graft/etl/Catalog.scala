@@ -45,8 +45,8 @@ final case class Catalog(root: String, messageBuckets: Int = 16) {
     * Every ever-growing append shape read by recency is listed:
     * `logs` ≙ the reference's log table read only by `ORDER BY
     * timestamp DESC LIMIT n` (routes.ts:238-241) — the streaming
-    * quarantine channel also lands there (Pipeline.quarantineToLogs),
-    * so it rides the same hint; `key_backup_status` ≙ the append-only
+    * dead letters also land there (`Pipeline.writeDeadLetters`), so
+    * they ride the same hint; `key_backup_status` ≙ the append-only
     * status history (L5, schema.ts:72-78). In the reference that table
     * is write-only (INSERT only, db.utils.ts:206-213); the
     * latest-status read pattern is INFERRED here from the reference's

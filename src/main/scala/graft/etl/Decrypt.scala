@@ -1,14 +1,19 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets
-import java.security.SecureRandom
 import javax.crypto.spec.{GCMParameterSpec, PBEKeySpec, SecretKeySpec}
 import javax.crypto.{Cipher, SecretKeyFactory}
 import java.util.Base64
-import org.apache.spark.sql.SparkSession
+
+/** Storage-key parameters for the ingest-edge decrypt (T8): the
+  * PBKDF2-SHA512 inputs the reference reads from secret-storage key
+  * info (crypto.ts:202-211). One config per pipeline ≙ one storage key
+  * per account (client.ts:348-371). */
+final case class CryptoConfig(passphrase: String, saltB64: String, iterations: Int)
 
 /** E2EE layer (T8): PBKDF2-SHA512 key derivation + AES-GCM-256 payload
-  * crypto, exposed as deterministic Scala UDFs at the ingest edge.
+  * crypto, applied at the ingest edge by one Scala UDF, [[decryptUdf]]
+  * (called by `Ingest.decryptMessages`).
   *
   * Parameters mirror the reference exactly (src/app/matrix/crypto.ts:
   * 181-224: PBKDF2WithHmacSHA512, iterations from key info, 32-byte key;
@@ -17,12 +22,6 @@ import org.apache.spark.sql.SparkSession
   * Expression) is the right altitude — it runs once per encrypted event
   * at the edge, never in an analytic hot path.
   */
-/** Storage-key parameters for the ingest-edge decrypt (T8): the
-  * PBKDF2-SHA512 inputs the reference reads from secret-storage key
-  * info (crypto.ts:202-211). One config per pipeline ≙ one storage key
-  * per account (client.ts:348-371). */
-final case class CryptoConfig(passphrase: String, saltB64: String, iterations: Int)
-
 object Decrypt {
 
   val KeyLenBytes = 32 // crypto.ts:16 (32-byte key)
@@ -81,12 +80,6 @@ object Decrypt {
     Base64.getEncoder.encodeToString(iv ++ ct)
   }
 
-  def encryptRandomIv(plaintext: String, key: Array[Byte]): String = {
-    val iv = new Array[Byte](GcmIvBytes)
-    new SecureRandom().nextBytes(iv)
-    encrypt(plaintext, key, iv)
-  }
-
   /** AES-GCM-256 decrypt of base64(iv ‖ ct ‖ tag); None on auth failure
     * (the reference records failures in the per-row `error` column —
     * schema.ts:66 — rather than aborting the sync). */
@@ -101,32 +94,14 @@ object Decrypt {
       Some(new String(cipher.doFinal(ct), StandardCharsets.UTF_8))
     } catch { case _: Exception => None }
 
-  /** Closure-capturing decrypt UDF for the pipeline hot path: the
+  /** The pipeline's decrypt UDF, closure-capturing: the
     * [[CryptoConfig]] ships to executors inside the task closure, NOT as
     * literal columns in the query plan, so key material never appears in
     * EXPLAIN output, the Spark UI SQL tab, or event logs — the reference
     * keeps key material in secret storage and never in query text
-    * (crypto.ts:202-211). Same memoized PBKDF2 as the SQL UDFs. */
+    * (crypto.ts:202-211). The key comes from [[deriveKeyCached]], so a
+    * batch derives it once per executor, not once per row. */
   def decryptUdf(c: CryptoConfig): org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf((payload: String) =>
       decrypt(payload, deriveKeyCached(c.passphrase, c.saltB64, c.iterations)).orNull)
-
-  /** Register `decrypt_event(payload, passphrase, salt_b64, iterations)`,
-    * `decrypt_event_key(payload, key_b64)` (key pre-derived once on the
-    * driver — the cheapest path for a constant-key sync batch) and
-    * `derive_key_b64(passphrase, salt_b64, iterations)` UDFs. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("derive_key_b64",
-      (pass: String, saltB64: String, iterations: Int) =>
-        Base64.getEncoder.encodeToString(
-          deriveKeyCached(pass, saltB64, iterations)))
-    spark.udf.register("decrypt_event",
-      (payload: String, pass: String, saltB64: String, iterations: Int) => {
-        val key = deriveKeyCached(pass, saltB64, iterations)
-        decrypt(payload, key).orNull
-      })
-    spark.udf.register("decrypt_event_key",
-      (payload: String, keyB64: String) =>
-        decrypt(payload, Base64.getDecoder.decode(keyB64)).orNull)
-  }
 }

@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions._
   * as one orchestration object.
   *
   *  - `bootstrap`: schema creation (L9) — Catalog.bootstrap.
-  *  - first run (no sync token ⇒ no checkpoint): full batch backfill of
-  *    rooms + participants + messages from the raw-event corpus — the
-  *    reference's `initialFetch` branch (client.ts:304-314);
-  *  - steady state: Structured-Streaming ingest (Streaming.scala) with
+  *  - every run is Structured-Streaming ingest (Streaming.scala) with
   *    per-batch merges; the checkpoint directory IS the sync token
-  *    (S5/S7/L8);
+  *    (S5/S7/L8). The first run (no checkpoint) is the reference's
+  *    `initialFetch` branch (client.ts:304-314): its first batch lands
+  *    in an empty catalog, so `applyBatch` merges it with no persisted
+  *    room state to consult;
   *  - when a [[CryptoConfig]] is supplied, every batch decrypts
   *    `is_encrypted` events in the hot path (T8, crypto.ts:181-224):
   *    successes land plaintext in `messages`, AES-GCM auth failures set
@@ -89,19 +89,6 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
         concat_ws(": ", col("event_id"), coalesce(col("error"), lit(fallback)))
           .as("message"))))
     }
-
-  /** First-run batch backfill from a raw-event DataFrame (S5 snapshot
-    * branch). Incremental runs skip this exactly like the reference:
-    * the existence of a sync token (here: any messages snapshot)
-    * short-circuits. */
-  def backfillIfFirstRun(spark: SparkSession, raw: DataFrame): Boolean = {
-    if (catalog.exists("messages")) return false
-    val messageDead = mergeMessages(spark, raw)
-    val memberDead = mergeParticipants(spark, raw, roomState = None)
-    mergeRooms(spark, raw)
-    writeDeadLetters(spark, None, messageDead, memberDead)
-    true
-  }
 
   /** Incremental micro-batch apply (the body of every E2 micro-batch):
     * the reference's three per-batch subscriptions (client.ts:259-284)
@@ -193,8 +180,8 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
     * membership are rejected by the reference's insert (schema.ts:45),
     * so they are returned as dead letters — never merged as a silent "".
     * `roomState` is the persisted participants snapshot for SDK-faithful
-    * duplicate-name disambiguation scope (None on backfill: the corpus
-    * IS the state). */
+    * duplicate-name disambiguation scope (None when there is none to
+    * consult: the batch IS the state). */
   private def mergeParticipants(spark: SparkSession, raw: DataFrame,
       roomState: Option[DataFrame]): Option[DataFrame] = {
     val (ok, bad) = Ingest.quarantine(Ingest.projectParticipant(raw, roomState))

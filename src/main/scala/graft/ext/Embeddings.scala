@@ -79,28 +79,6 @@ object Embeddings {
   def assign(vecs: DataFrame, cells: DataFrame): DataFrame =
     assignTop(vecs, cells, 1).drop("cell_rank")
 
-  /** Full Lloyd's iteration (spec-exercised; the registered query is
-    * one step so the oracle stays SQL-expressible): k cells seeded
-    * from the current `label` column, then `rounds` update+assign
-    * passes. Deterministic: every centroid update is the exact
-    * quantized mean. Each round's assignment is localCheckpointed —
-    * the lineage would otherwise double per round (the iterative-
-    * algorithm discipline of Cluster.cc*). */
-  def kmeans(vecs: DataFrame, rounds: Int): DataFrame = {
-    var cur = vecs.select("vec_id", "label", "embedding").localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
-      val next = assign(cur, centroids(cur))
-        .select(col("vec_id"), col("assigned").as("label"))
-        .join(vecs.select("vec_id", "embedding"), "vec_id")
-        .select("vec_id", "label", "embedding")
-        .localCheckpoint(true)
-      cur = next
-      r += 1
-    }
-    cur.select("vec_id", "label")
-  }
-
   /** DuckDB sequential left-fold with explicit 0.0 init — matches
     * Spark's `aggregate(arr, 0.0d, +)` exactly. */
   private[graft] def foldSql(arr: String): String =

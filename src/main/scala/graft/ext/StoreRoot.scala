@@ -32,6 +32,9 @@ import org.apache.spark.sql.functions._
   * deleting the manifest forces the full scan. A manifest rewritten
   * with a new fingerprint deletes the roots the old one named
   * ([[retire]]), so a store parent keeps one generation per source dir.
+  * Each resolve also [[sweep]]s the parent: a manifest whose source
+  * files are all gone goes, with the roots it names, so the parent
+  * keeps no store of a deleted source dir.
   *
   * Build once. `once(root)(build)` runs `build` only when `root` has
   * no `_DONE` marker, wiping whatever a failed earlier build left
@@ -83,12 +86,10 @@ private[graft] object StoreRoot {
       val df = table(s, dir)
       val meta = sourceMeta(df)
       val manifest = Paths.get(parent, s"$md.manifest")
-      // (source metadata, suffix) the manifest recorded, if any
-      val old = Some(manifest).filter(Files.exists(_)).map(m => new String(
-        Files.readAllBytes(m), StandardCharsets.UTF_8).split("\n::\n", 2))
-        .collect { case Array(m, sfx) => (m, sfx.trim) }
-      val recorded = for (m <- meta; (om, sfx) <- old if om == m) yield sfx
-      val suffix = recorded.getOrElse {
+      sweep(s, parent, manifest)
+      val old = recorded(manifest)
+      val hit = for (m <- meta; (om, sfx) <- old if om == m) yield sfx
+      val suffix = hit.getOrElse {
         val r = df.agg(count(lit(1)), max(col(idCol)),
           expr("bit_xor(xxhash64(*))")).collect()(0)
         val sfx =
@@ -106,6 +107,13 @@ private[graft] object StoreRoot {
       s"$parent/$suffix"
     })
 
+  /** (source metadata, suffix) a manifest recorded; None when there is
+    * none (or another resolve swept it meanwhile). */
+  private def recorded(manifest: java.nio.file.Path): Option[(String, String)] =
+    try Some(new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
+      .split("\n::\n", 2)).collect { case Array(m, sfx) => (m, sfx.trim) }
+    catch { case _: java.io.IOException => None }
+
   /** Deletes the roots a replaced manifest named: `<parent>/<suffix>`
     * and its derived siblings `<parent>/<suffix>-*` (`-t4inc`,
     * `-grown256`, `-inc`, `-pq`). Only the one suffix is touched, so the
@@ -115,6 +123,29 @@ private[graft] object StoreRoot {
       .map(_.getFileName.toString)
       .filter(n => n == suffix || n.startsWith(s"$suffix-"))
       .foreach(n => MergeWriter.deleteRecursively(Paths.get(parent, n)))
+
+  /** Deletes every manifest under `parent` but `keep` whose recorded
+    * source files are all gone, after [[retire]]-ing the roots it
+    * names: no resolve can reach them again. A manifest that lists no
+    * file, or a file whose existence cannot be checked, stays. */
+  private def sweep(s: SparkSession, parent: String, keep: java.nio.file.Path): Unit =
+    if (Files.isDirectory(Paths.get(parent))) {
+      val conf = s.sparkContext.hadoopConfiguration
+      // a [[sourceMeta]] line: path|size|mtimeMs, plus |ctimeNs for file:
+      def gone(line: String): Boolean = try {
+        val p = new Path(line.split('|')
+          .dropRight(if (line.startsWith("file:")) 3 else 2).mkString("|"))
+        !p.getFileSystem(conf).exists(p)
+      } catch { case scala.util.control.NonFatal(_) => false }
+      Using.resource(Files.list(Paths.get(parent)))(_.iterator().asScala.toList)
+        .filter(m => m.getFileName.toString.endsWith(".manifest") && m != keep)
+        .foreach(m => recorded(m).foreach { case (meta, sfx) =>
+          if (meta.nonEmpty && meta.split("\n").forall(gone)) {
+            retire(parent, sfx)
+            Files.deleteIfExists(m)
+          }
+        })
+    }
 
   /** Runs `build` into `root` unless a finished build is already there;
     * returns once `root` holds one. */

@@ -32,7 +32,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(back.getString(0) == "DEVICEABCD")
     val storedKey = back.getAs[Array[Byte]]("storage_key")
     assert(storedKey.toSeq == key.toSeq && storedKey.length == 32)
-    val ct = Decrypt.encryptRandomIv("payload", key)
+    val ct = CryptoFixtures.encryptRandomIv("payload", key)
     assert(Decrypt.decrypt(ct, storedKey).contains("payload"))
   }
 

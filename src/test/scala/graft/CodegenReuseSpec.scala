@@ -44,7 +44,7 @@ class CodegenReuseSpec extends AnyFunSuite {
       ev("nomem", "@bob:x", "m.room.member", 3, """{"displayname":"Bob"}"""),
       ev("p", "@alice:x", "m.room.message", 4, """{"body":"plain"}"""),
       ev("e", "@alice:x", "m.room.message", 5,
-        Decrypt.encryptRandomIv("""{"body":"secret"}""", key), enc = true))
+        CryptoFixtures.encryptRandomIv("""{"body":"secret"}""", key), enc = true))
     RestartFixtures.writeJsonl(dir.toString, f"b$n%03d.jsonl",
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Schemas.rawEvent),
       Seq("""{"broken"""))

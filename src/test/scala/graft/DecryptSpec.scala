@@ -1,7 +1,8 @@
 package graft
 
-import graft.etl.Decrypt
-import org.apache.spark.sql.SparkSession
+import graft.etl.{CryptoConfig, Decrypt, Ingest}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 class DecryptSpec extends AnyFunSuite {
@@ -19,7 +20,7 @@ class DecryptSpec extends AnyFunSuite {
 
   test("AES-GCM roundtrip; tampering fails closed") {
     val key = Decrypt.deriveKey("pass", "salt0000".getBytes, 100)
-    val ct = Decrypt.encryptRandomIv("""{"body":"secret"}""", key)
+    val ct = CryptoFixtures.encryptRandomIv("""{"body":"secret"}""", key)
     assert(Decrypt.decrypt(ct, key).contains("""{"body":"secret"}"""))
     // flip one ciphertext char → GCM auth must reject, not garble
     val tampered = ct.updated(20, if (ct(20) == 'A') 'B' else 'A')
@@ -28,45 +29,47 @@ class DecryptSpec extends AnyFunSuite {
     assert(Decrypt.decrypt(ct, wrongKey).isEmpty)
   }
 
-  test("decrypt_event UDF decrypts at the ingest edge") {
+  private def messages(rows: Seq[(String, String, Boolean)]): DataFrame = {
     import spark.implicits._
-    Decrypt.register(spark)
-    val salt = java.util.Base64.getEncoder.encodeToString("salty".getBytes)
-    val key = Decrypt.deriveKey("p", "salty".getBytes, 10)
-    val payload = Decrypt.encryptRandomIv("hello", key)
-    val out = Seq(payload).toDF("content")
-      .selectExpr(s"decrypt_event(content, 'p', '$salt', 10) AS plain")
-      .collect()(0).getString(0)
-    assert(out == "hello")
+    rows.toDF("event_id", "content", "is_encrypted").withColumn("error", lit(null: String))
   }
 
-  test("decrypt_event derives the PBKDF2 key ONCE per (pass, salt, iters), not per row") {
-    import spark.implicits._
-    Decrypt.register(spark)
+  test("decryptMessages: ciphertext decrypts, tampering sets the error, plaintext passes") {
+    val crypto = CryptoConfig("p", java.util.Base64.getEncoder.encodeToString("salty".getBytes), 10)
+    val key = Decrypt.deriveKey("p", "salty".getBytes, 10)
+    val ct = CryptoFixtures.encryptRandomIv("hello", key)
+    val tampered = ct.updated(20, if (ct(20) == 'A') 'B' else 'A')
+    val out = Ingest.decryptMessages(messages(Seq(
+        ("$e1:x", CryptoFixtures.encryptRandomIv("hello", key), true),
+        ("$e2:x", tampered, true),
+        ("$p3:x", "plain", false))), crypto)
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(3))).toMap
+    assert(out("$e1:x") == ("hello", null))
+    assert(out("$e2:x") == (tampered, "decrypt_failed: AES-GCM authentication"))
+    assert(out("$p3:x") == ("plain", null))
+  }
+
+  test("decryptMessages derives the PBKDF2 key ONCE per (pass, salt, iters), not per row") {
     val salt = java.util.Base64.getEncoder.encodeToString("memosalt".getBytes)
-    val key = Decrypt.deriveKeyCached("memo-pass", salt, 10)
-    val rows = (1 to 1000).map(i => Decrypt.encryptRandomIv(s"msg$i", key))
+    val key = Decrypt.deriveKey("memo-pass", "memosalt".getBytes, 10) // uncached: the cache stays cold
+    val rows = (1 to 1000).map(i => (s"$$m$i:x", CryptoFixtures.encryptRandomIv(s"msg$i", key), true))
     val before = Decrypt.deriveCount.get()
-    val n = rows.toDF("content").repartition(2)
-      .selectExpr(s"decrypt_event(content, 'memo-pass', '$salt', 10) AS plain")
-      .filter("plain IS NOT NULL").count()
+    val n = Ingest.decryptMessages(messages(rows).repartition(2),
+        CryptoConfig("memo-pass", salt, 10))
+      .filter("error IS NULL").count()
     assert(n == 1000)
     val derives = Decrypt.deriveCount.get() - before
     // at most one derivation per partition-thread; never one per row
     // (local-mode UDF closures share the executor JVM's cache)
-    assert(derives <= 4, s"expected memoized derivation, got $derives derivations for 1000 rows")
+    assert(derives >= 1 && derives <= 4, s"expected memoized derivation, got $derives derivations for 1000 rows")
   }
 
   test("pipeline decrypt never ships key material through the query plan") {
-    import spark.implicits._
-    import graft.etl.{CryptoConfig, Ingest}
     val pass = "hotpath-passphrase-7f3a"
     val saltB64 = java.util.Base64.getEncoder.encodeToString("hotsalt1".getBytes)
     val crypto = CryptoConfig(pass, saltB64, 10)
     val key = Decrypt.deriveKey(pass, "hotsalt1".getBytes, 10)
-    val msgs = Seq(("$e1:x", Decrypt.encryptRandomIv("""{"body":"s"}""", key), true))
-      .toDF("event_id", "content", "is_encrypted")
-      .withColumn("error", org.apache.spark.sql.functions.lit(null: String))
+    val msgs = messages(Seq(("$e1:x", CryptoFixtures.encryptRandomIv("""{"body":"s"}""", key), true)))
     val out = Ingest.decryptMessages(msgs, crypto)
     // the passphrase/salt must live in the UDF closure, not plan text —
     // EXPLAIN output and the Spark UI SQL tab render plan literals
@@ -75,17 +78,5 @@ class DecryptSpec extends AnyFunSuite {
     assert(!plans.contains(saltB64), "salt leaked into the query plan")
     // and it still decrypts
     assert(out.select("content").collect()(0).getString(0) == """{"body":"s"}""")
-  }
-
-  test("decrypt_event_key uses a pre-derived key (no per-row derivation at all)") {
-    import spark.implicits._
-    Decrypt.register(spark)
-    val key = Decrypt.deriveKey("kp", "keysalt1".getBytes, 10)
-    val keyB64 = java.util.Base64.getEncoder.encodeToString(key)
-    val payload = Decrypt.encryptRandomIv("direct", key)
-    val out = Seq(payload).toDF("content")
-      .selectExpr(s"decrypt_event_key(content, '$keyB64') AS plain")
-      .collect()(0).getString(0)
-    assert(out == "direct")
   }
 }

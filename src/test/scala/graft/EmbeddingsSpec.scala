@@ -15,6 +15,22 @@ class EmbeddingsSpec extends AnyFunSuite {
 
   import graft.ext.Embeddings
 
+  /** Full Lloyd's iteration: k cells seeded from the current `label`
+    * column, then `rounds` update+assign passes of the registered
+    * step ([[Embeddings.centroids]], [[Embeddings.assign]]). Each
+    * round's assignment is localCheckpointed, so the lineage does not
+    * double per round. */
+  private def kmeans(vecs: DataFrame, rounds: Int): DataFrame = {
+    var cur = vecs.select("vec_id", "label", "embedding").localCheckpoint(true)
+    for (_ <- 1 to rounds)
+      cur = Embeddings.assign(cur, Embeddings.centroids(cur))
+        .select(col("vec_id"), col("assigned").as("label"))
+        .join(vecs.select("vec_id", "embedding"), "vec_id")
+        .select("vec_id", "label", "embedding")
+        .localCheckpoint(true)
+    cur.select("vec_id", "label")
+  }
+
   /** Three well-separated synthetic clusters at offsets 0 / 100 / 200
     * in every dimension, deliberately MIS-labeled round-robin so the
     * seed partition is maximally wrong. */
@@ -28,7 +44,7 @@ class EmbeddingsSpec extends AnyFunSuite {
   }
 
   test("Lloyd's iteration recovers separable clusters from an adversarial seed") {
-    val got = Embeddings.kmeans(separable(30), rounds = 4)
+    val got = kmeans(separable(30), rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // every vector in the same true cluster must share a cell, and the
     // three true clusters must land in three DISTINCT cells
@@ -40,8 +56,8 @@ class EmbeddingsSpec extends AnyFunSuite {
 
   test("Lloyd's iteration is a fixpoint once assignments stop moving") {
     val v = separable(30)
-    val a4 = Embeddings.kmeans(v, rounds = 4).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val a5 = Embeddings.kmeans(v, rounds = 5).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    val a4 = kmeans(v, rounds = 4).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    val a5 = kmeans(v, rounds = 5).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(a4 == a5, "converged assignment must not move on an extra round")
   }
 

@@ -30,7 +30,7 @@ class FullIngestBatchSpec extends AnyFunSuite {
     Row(id, room, sender, typ, ts, content, null, encrypted, false, null)
 
   private def tampered: String = {
-    val ct = Decrypt.encryptRandomIv("""{"body":"never"}""", key)
+    val ct = CryptoFixtures.encryptRandomIv("""{"body":"never"}""", key)
     ct.updated(20, if (ct(20) == 'A') 'B' else 'A')
   }
 
@@ -43,7 +43,7 @@ class FullIngestBatchSpec extends AnyFunSuite {
     ev(s"$$nomem-$tag:x", s"!r$tag:x", "@bob:x", "m.room.member", ts + 3, """{"displayname":"Bob"}"""),
     ev(s"$$p-$tag:x", s"!r$tag:x", "@alice:x", "m.room.message", ts + 4, """{"body":"plain"}"""),
     ev(s"$$e-$tag:x", s"!r$tag:x", "@alice:x", "m.room.message", ts + 5,
-      Decrypt.encryptRandomIv("""{"body":"secret"}""", key), encrypted = true),
+      CryptoFixtures.encryptRandomIv("""{"body":"secret"}""", key), encrypted = true),
     ev(s"$$bad-$tag:x", s"!r$tag:x", "@bob:x", "m.room.message", ts + 6, tampered, encrypted = true))
 
   private def frame(rows: Seq[Row]): DataFrame =

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end reference lifecycle over the FIXTURES §A1 corpus:
-  * bootstrap → first-run backfill → incremental batches with duplicate /
-  * late / membership-churn events → API reads (Q1–Q8 true shapes). */
+  * bootstrap → first batch into the empty catalog → incremental
+  * batches with duplicate / late / membership-churn events → API
+  * reads (Q1–Q8 true shapes). */
 class PipelineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.local(cores = 4, appName = "graft-pipe")
 
@@ -50,15 +51,16 @@ class PipelineSpec extends AnyFunSuite {
       msg(99, "!r1:x", "@bob:x", 90L, backfill = true) // must be dropped
     ))
 
-    assert(pipe.backfillIfFirstRun(spark, corpus), "first run backfills")
-    assert(!pipe.backfillIfFirstRun(spark, corpus), "second run skips (token present)")
+    // the first run is the stream's first batch into an empty catalog
+    pipe.applyBatch(spark, corpus, batchId = 0L)
+    def counts = Seq("messages", "rooms", "participants").map(cat.read(spark, _).count())
+    assert(counts == Seq(3L, 2L, 3L))
+    pipe.applyBatch(spark, corpus, batchId = 0L)
+    assert(counts == Seq(3L, 2L, 3L), "a replayed first batch changes no table")
 
     val api = Api(cat)
-    assert(cat.read(spark, "messages").count() == 3)
-    assert(cat.read(spark, "rooms").count() == 2)
-    assert(cat.read(spark, "participants").count() == 3)
 
-    // Q1: r1 has the latest message at backfill time? r2 ts=120 is latest
+    // Q1: after the first batch, r2 (ts=120) has the latest message
     val roomsOrdered = api.listRooms(spark).select("room_id").collect().map(_.getString(0))
     assert(roomsOrdered.head == "!r2:x", s"got ${roomsOrdered.toSeq}")
     // encryption state reached the rooms dimension (T5)
@@ -166,9 +168,9 @@ class PipelineSpec extends AnyFunSuite {
 
     def enc(id: Int, room: String, ts: Long, plain: String): Row =
       Row(s"$$e$id:x", room, "@alice:x", "m.room.message", ts,
-        Decrypt.encryptRandomIv(plain, key), null, true, false, null)
+        CryptoFixtures.encryptRandomIv(plain, key), null, true, false, null)
     // tamper mid-ciphertext but keep valid base64 → GCM auth must fail
-    val goodCt = Decrypt.encryptRandomIv("""{"body":"never-see-this"}""", key)
+    val goodCt = CryptoFixtures.encryptRandomIv("""{"body":"never-see-this"}""", key)
     val tampered = {
       val i = 20
       val c = if (goodCt(i) == 'A') 'B' else 'A'
@@ -176,13 +178,13 @@ class PipelineSpec extends AnyFunSuite {
     }
     val derivationsBefore = Decrypt.deriveCount.get()
 
-    assert(pipe.backfillIfFirstRun(spark, raw(Seq(
+    pipe.applyBatch(spark, raw(Seq(
       enc(1, "!r1:x", 100L, """{"msgtype":"m.text","body":"secret one"}"""),
       enc(2, "!r1:x", 110L, """{"msgtype":"m.text","body":"secret two"}"""),
       Row("$e3:x", "!r1:x", "@bob:x", "m.room.message", 120L,
         tampered, null, true, false, null),
       msg(4, "!r1:x", "@bob:x", 130L, body = "plaintext untouched")
-    ))))
+    )), batchId = 0L)
 
     val msgs = cat.read(spark, "messages")
     assert(msgs.count() == 3, "2 decrypted + 1 plaintext; tampered row kept out")

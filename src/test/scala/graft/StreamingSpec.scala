@@ -81,7 +81,7 @@ class StreamingSpec extends AnyFunSuite {
       Row("$p1:x", "!r1:x", "@alice:x", "m.room.message", 100L,
         """{"msgtype":"m.text","body":"plain"}""", null, false, false, null),
       Row("$e1:x", "!r1:x", "@alice:x", "m.room.message", 110L,
-        Decrypt.encryptRandomIv("""{"msgtype":"m.text","body":"secret"}""", key),
+        CryptoFixtures.encryptRandomIv("""{"msgtype":"m.text","body":"secret"}""", key),
         null, true, false, null)
     ))
     ingest(spark, src, ckpt, pipe)
@@ -95,7 +95,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(cat.read(spark, "sync_state").count() == 1, "L8 token per batch")
 
     // micro-batch 2: tampered ciphertext (→ quarantine) + late duplicate
-    val goodCt = Decrypt.encryptRandomIv("""{"body":"x"}""", key)
+    val goodCt = CryptoFixtures.encryptRandomIv("""{"body":"x"}""", key)
     val tampered = goodCt.updated(20, if (goodCt(20) == 'A') 'B' else 'A')
     batch("b2.jsonl", Seq(
       Row("$e2:x", "!r1:x", "@bob:x", "m.room.message", 200L,
@@ -270,6 +270,22 @@ class StreamingSpec extends AnyFunSuite {
       assert(perBucket.forall(_._2.size == 1),
         s"$t buckets must stay compacted under the cadence")
     }
+  }
+
+  test("the stream handle reports a finished run: progress per batch, no exception") {
+    val base = Files.createTempDirectory("graft-handle")
+    val src = Files.createDirectories(base.resolve("src")).toString
+    RestartFixtures.writeJsonl(src, "b0.jsonl", rawRows(0 until 4, 1L))
+    val cat = Catalog(base.resolve("cat").toString)
+    cat.bootstrap()
+    val q = Streaming.startFullIngestJsonl(spark, src, base.resolve("ckpt").toString, Pipeline(cat))
+    q.awaitTermination()
+    assert(!q.isActive, "an AvailableNow run terminates")
+    assert(q.exception.isEmpty, s"a clean run reports no exception: ${q.exception}")
+    val progress = q.recentProgress.toSeq
+    assert(progress.nonEmpty, "a finished run keeps its progress")
+    assert(progress.map(p => (p.batchId, p.numInputRows)).contains((0L, 4L)),
+      s"batch 0 read the file's 4 lines: ${progress.map(p => (p.batchId, p.numInputRows))}")
   }
 
   test("quarantine split routes error rows") {

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * both fall back to the full fingerprint scan instead of throwing. A
   * local rewrite that keeps a file's size and mtime, or one that
   * changes only a column outside the id, must not reuse a stale
-  * fingerprint. `once` builds a root once per JVM and never leaves a
-  * failed build marked done. */
+  * fingerprint. A resolve sweeps the stores of source dirs that are
+  * gone. `once` builds a root once per JVM and never leaves a failed
+  * build marked done. */
 class StoreRootSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.local(cores = 2, appName = "graft-storeroot")
 
@@ -129,6 +130,22 @@ class StoreRootSpec extends AnyFunSuite {
       stale.foreach(r => assert(!Files.exists(Paths.get(r)), s"superseded root left behind: $r"))
       assert(Files.isDirectory(unnamed), s"a root the manifest did not name was deleted: $unnamed")
     } finally graft.etl.MergeWriter.deleteRecursively(unnamed)
+  }
+
+  test("a resolve sweeps the manifest and roots of a source dir that is gone") {
+    val gone = Files.createTempDirectory("graft-storeroot-gone")
+    val table = (s: SparkSession, d: String) => s.read.parquet(d)
+    val first = resolve(corpus(gone), table, envKey = "GRAFT_STOREROOT_SPEC_DIR_8")
+    val roots = Seq(first, s"$first-pq")
+    roots.foreach(r => StoreRoot.once(r)(Files.createFile(Paths.get(r, "data"))))
+    val manifest = Paths.get(first.take(first.lastIndexOf("-n40-")) + ".manifest")
+    assert(Files.exists(manifest), manifest)
+    graft.etl.MergeWriter.deleteRecursively(gone)
+    val second = resolve(corpus(Files.createTempDirectory("graft-storeroot-live")), table,
+      envKey = "GRAFT_STOREROOT_SPEC_DIR_8")
+    assert(Files.exists(Paths.get(second.take(second.lastIndexOf("-n40-")) + ".manifest")))
+    assert(!Files.exists(manifest), s"manifest of a deleted source dir left behind: $manifest")
+    roots.foreach(r => assert(!Files.exists(Paths.get(r)), s"root of a deleted source dir left behind: $r"))
   }
 
   test("once: a second call in the same JVM does not run the build again") {
